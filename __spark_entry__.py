@@ -1979,10 +1979,11 @@ def q115_grouped_quantile_hist(spark, sf_dir):
 
 def q137_grouped_quantile_midbin(spark, sf_dir):
     """Grouped EXACT quantile through the round-8 MIDBIN plan
-    (dataset._grouped_quantile_midbin: two-scan fixed 1/16-octave
-    bit-bin selection), pinned via the plan-picker options: buffering
-    banned above 2 rows, perf threshold 1 and fixed-cost floor 0 so
-    the probe runs, and the default midbin_limit catches (the q115
+    (dataset._grouped_quantile_midbin: two-scan selection over
+    1/16-octave buckets, one log2 per row, with the candidate rows
+    matched back by bucket id), pinned via the plan-picker options:
+    buffering banned above 2 rows, perf threshold 1 and fixed-cost
+    floor 0 so the probe runs, and the default midbin_limit catches (the q115
     pattern, one plan over).  The value column is cancellation-PRONE
     by construction — alternating-sign prices make the sorted stream
     cross zero between large near-symmetric magnitudes, the exact
@@ -5182,7 +5183,8 @@ def oracle_sql() -> dict[str, str]:
                      ) AS rk
               FROM documents
             )
-            SELECT source, COUNT(*) AS n_docs, SUM(n_chars) AS chars,
+            SELECT source, COUNT(*) AS n_docs,
+                   CAST(SUM(n_chars) AS BIGINT) AS chars,
                    COUNT(DISTINCT lang) AS n_langs
             FROM ranked WHERE rk <= 5 GROUP BY source
         """,

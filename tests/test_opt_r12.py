@@ -83,6 +83,14 @@ def test_two_phase_rank_materialized_matches_plain(spark):
     assert plain == mat
 
 
+def test_two_phase_rank_quotes_backtick_column(spark):
+    # the SQL-string window must escape a backtick inside the name
+    vals = spark.range(0, 50).select((F.col("id") * 3 % 50).alias("a`b"))
+    rows = two_phase_rank(vals, "a`b").collect()
+    assert len(rows) == 50
+    assert all(r["a`b"] == r["__rnk"] and r["__n"] == 50 for r in rows)
+
+
 def test_dim_labels_memoized_per_instance(spark):
     li = spark.read.parquet(f"{SF}/lineitem.parquet")
     ds = XDataset(li, dims=["l_orderkey", "l_linenumber"])

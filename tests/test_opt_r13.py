@@ -131,3 +131,24 @@ def test_local_df_matches_list_path_for_naive_timestamps(spark):
         else:
             os.environ["TZ"] = old_tz
         _time.tzset()
+
+
+def test_local_df_without_arrow_uses_bounded_parallelize(spark):
+    """With Arrow disabled in the session, local_df must take the
+    few-slice parallelize path, not createDataFrame(pandas).coalesce
+    (which pickles the rows anyway and serializes worker handshakes)."""
+    from xarray_spark._utils import local_df
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "false")
+    try:
+        rows = [(i, float(i) / 2) for i in range(40)]
+        out = local_df(spark, rows, "k long, v double")
+        assert "Coalesce" not in out._jdf.queryExecution() \
+            .executedPlan().toString()
+        assert sorted(tuple(r) for r in out.collect()) == rows
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)

@@ -382,19 +382,44 @@ def test_curation_pipeline_plan_shape(spark, entry):
     assert plan.count("BroadcastExchange") >= 1
 
 
+def _q137_frame(spark):
+    """q137's value column: alternating-sign lineitem prices."""
+    return (spark.read.parquet(f"{SF}/lineitem.parquet")
+            .select("l_orderkey", "l_linenumber", "l_returnflag",
+                    (F.col("l_extendedprice")
+                     * F.when(F.col("l_linenumber") % 2 == 0, F.lit(1.0))
+                        .otherwise(F.lit(-1.0))).alias("v")))
+
+
+def test_q137_midbin_bucket_is_one_log2_per_row(spark):
+    """The midbin bucket id costs one LOG2 and no POWER per row in
+    stage 1 (the exact bit-decomposition it replaced planned 20 LOG2
+    and 10 POWER there); the candidate scan, which recomputes the id
+    to join on (keys, bucket), plans at most 2 LOG2 (the join-key
+    null filter Catalyst infers may repeat it) on both join paths."""
+    from xarray_spark import dataset as D
+    df = _q137_frame(spark)
+    keys = ["l_returnflag"]
+    stage1 = plan_of(D._midbin_hist(df, keys, "v"))
+    assert stage1.count("LOG2(") == 1 and "POWER(" not in stage1, stage1
+    targets = spark.createDataFrame([("A", 17_300)],
+                                    "l_returnflag string, __b int")
+    for null_safe in (False, True):
+        cand = plan_of(D._midbin_candidates(df, keys, "v", targets,
+                                            null_safe=null_safe))
+        assert cand.count("LOG2(") <= 2 and "POWER(" not in cand, cand
+        assert "BroadcastHashJoin" in cand
+
+
 def test_q137_executes_midbin_plan(spark, entry):
     """Round-9 verdict #3: q137 must actually execute the MIDBIN plan
     — the picker must return 'midbin' under q137's options, and the
     distributed tail's plan must be fed by the fixed-bucket scan, not
     a global sort: no rangepartitioning exchange anywhere, and the
-    bit-bin bucket column drives the candidate window."""
+    bucket-id column drives the candidate window."""
     from xarray_spark import set_options
     from xarray_spark import dataset as D
-    df = (spark.read.parquet(f"{SF}/lineitem.parquet")
-          .select("l_orderkey", "l_linenumber", "l_returnflag",
-                  (F.col("l_extendedprice")
-                   * F.when(F.col("l_linenumber") % 2 == 0, F.lit(1.0))
-                      .otherwise(F.lit(-1.0))).alias("v")))
+    df = _q137_frame(spark)
     with set_options(grouped_quantile_buffer_limit=2,
                      grouped_quantile_midbin_threshold=1,
                      grouped_quantile_midbin_total_floor=0):

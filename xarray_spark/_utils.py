@@ -67,13 +67,14 @@ def two_phase_rank(df, col: str, materialize: bool = False):
     (measured round 13: ~96 ms/call of pure driver time before, ~3×
     fewer JVM calls after; same physical plan).
     """
-    part = df.repartitionByRange(F.col(col).asc()).selectExpr(
+    quoted = "`" + col.replace("`", "``") + "`"
+    part = df.repartitionByRange(F.col(quoted).asc()).selectExpr(
         "*", "spark_partition_id() AS __pid")
     if materialize:
         part = part.localCheckpoint(eager=False)
     local = part.selectExpr(
         "*",
-        f"row_number() OVER (PARTITION BY __pid ORDER BY `{col}` ASC)"
+        f"row_number() OVER (PARTITION BY __pid ORDER BY {quoted} ASC)"
         " - 1 AS __lrank")
     offs = part.groupBy("__pid").count().selectExpr(
         "__pid",
@@ -201,10 +202,11 @@ def local_df(spark, rows, schema):
     table + coalesce(2) = 2.5 s at local[32] vs 0.09 s via Arrow).
     The Arrow local path converts the rows driver-side into Arrow
     batches the JVM reads directly — no Python workers at all — and is
-    core-count-independent.  Rows that Arrow cannot represent fall
-    back to an explicit FEW-slice parallelize (still bounded
-    handshakes).  Value semantics are pinned by tests + the oracle:
-    object-dtype pandas keeps None as null (never NaN-ified).
+    core-count-independent.  Rows that Arrow cannot represent, and
+    every row when the session disables Arrow, fall back to an
+    explicit FEW-slice parallelize (still bounded handshakes).  Value
+    semantics are pinned by tests + the oracle: object-dtype pandas
+    keeps None as null (never NaN-ified).
     """
     rows = list(rows)
     if not rows:
@@ -215,15 +217,15 @@ def local_df(spark, rows, schema):
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, n), schema)
 
+    if spark.conf.get("spark.sql.execution.arrow.pyspark.enabled",
+                      "false").lower() != "true":
+        # without Arrow createDataFrame(pdf) pickles the rows too, and
+        # the coalesce below would serialize their worker handshakes
+        return _fallback()
     try:
         import datetime as _dt
 
         import pandas as pd
-        # timestamps stay on the (bounded-slice) pickle path: the Arrow
-        # local conversion localizes naive datetimes differently from
-        # the pickled-row path when the SESSION timezone is not the
-        # driver's (caught by the non-UTC midbin driver test); dates
-        # are tz-free and safe
         struct = None
         if hasattr(schema, "fields"):
             struct = schema

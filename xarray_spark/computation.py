@@ -569,28 +569,6 @@ _DT_UNIT_SECONDS = {"W": 604800.0, "D": 86400.0, "h": 3600.0, "m": 60.0,
                     "s": 1.0, "ms": 1e-3, "us": 1e-6, "ns": 1e-9}
 
 
-def _coord_numeric(ds: XDataset, coord: str, datetime_unit: str | None):
-    """Numeric view of a (possibly temporal) coord in datetime_unit.
-
-    Temporal route goes through unix_micros (an exact integer — epoch
-    us < 2^53) so sub-second precision survives; the old epoch-seconds
-    double had ~240 ns ulp at 2026 timestamps."""
-    from xarray_spark._utils import is_temporal
-    dtype = ds.df.schema[coord].dataType
-    if is_temporal(dtype):
-        if datetime_unit is None:
-            datetime_unit = "ns"
-        us = F.unix_micros(F.col(coord).cast("timestamp"))
-        if datetime_unit == "ns":
-            # multiply, don't divide by 1e-3 (0.001 is not exactly
-            # representable; ×1000.0 is the bit-exact int-ns rounding)
-            return us * F.lit(1000.0)
-        return us / F.lit(_DT_UNIT_SECONDS[datetime_unit] * 1e6)
-    if datetime_unit is not None:
-        raise ValueError("datetime_unit is only valid for datetime coords")
-    return F.col(coord).cast("double")
-
-
 def _anchored_coord_col(ds: XDataset, coord: str,
                         datetime_unit: str | None, others):
     """(df, x) numeric coord view with a per-frame integer anchor

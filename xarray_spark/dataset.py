@@ -294,7 +294,7 @@ def _grouped_quantile_plan(df: DataFrame, keys: list,
     Returns ``(plan, probe_hist)``.  Free when plan statistics bound
     the WHOLE table under the buffer limit (no group can exceed it);
     otherwise ONE scan finds the max group size — and when
-    ``probe_var`` is given, that scan IS the bit-bin bucket table of
+    ``probe_var`` is given, that scan IS the 1/16-octave bucket table of
     that var (eagerly materialized): if the verdict is ``'midbin'``,
     the caller hands it straight to :func:`_grouped_quantile_midbin`
     as its stage 1, so the plan decision costs no extra pass.
@@ -363,55 +363,70 @@ def _grouped_quantile_plan(df: DataFrame, keys: list,
     return pick(m), None
 
 
-def _sortable_bin(vv: Column) -> Column:
-    """EXACT monotone fixed binning of a double column: (sign, true
-    binary exponent, 4-bit mantissa prefix) folded into one int — a
-    1/16-octave bucket.  Monotone in the value (so cumulative counts
-    map order-statistic ranks to buckets) and computable WITHOUT a
-    min/max pass, which is the whole point: the grouped selection
-    skips the stats scan the equi-width histogram needs.
-
-    Exactness argument (every step is IEEE-exact, so the binning is a
-    true monotone function of the double, never off at a boundary):
-    ``log2`` is only an ESTIMATE of the exponent (±1), corrected
-    against ``pow(2, e)`` which is exact for integer e; ``m / 2^e`` is
-    an exact scaling; ``frac - 1`` is exact by Sterbenz; ``* 16`` is
-    an exact power-of-two scaling; ``floor`` is exact.
-    """
-    m = F.abs(vv)
-    e0 = F.floor(F.log2(m)).cast("int")
-    p0 = F.pow(F.lit(2.0), e0.cast("double"))
-    e = (F.when(m < p0, e0 - 1)
-         .when(m >= p0 * F.lit(2.0), e0 + 1)
-         .otherwise(e0))
-    p = F.pow(F.lit(2.0), e.cast("double"))
-    sub = F.floor((m / p - F.lit(1.0)) * 16).cast("int")
-    mag = (e + 1100) * 16 + sub  # > 0 for every finite nonzero m
-    return (F.when(vv == 0, F.lit(0))
-            .when(vv == F.lit(float("inf")), F.lit(1 << 30))
-            .when(vv == F.lit(float("-inf")), F.lit(-(1 << 30)))
-            .when(vv > 0, mag)
-            .otherwise(-mag))
-
-
 #: sentinel bucket for null/NaN rows — above every value bucket, so it
 #: never enters a cumulative count but keeps all-null groups visible
 _MIDBIN_NULL = (1 << 30) + 1
+#: shifts floor(16·log2|v|) of every finite nonzero double (≥ -17184,
+#: the smallest subnormal) to a positive magnitude
+_MIDBIN_OFFSET = 17_200.0
+
+
+def _midbin_bucket(vv: Column) -> Column:
+    """Monotone 1/16-octave bucket id of a double column, ONE ``log2``
+    per row: ``sign(v)·(floor(16·log2|v|) + C)`` for finite nonzero v;
+    0, ±2^30 and :data:`_MIDBIN_NULL` for zero, ±inf and null/NaN.
+
+    Monotone in the value (so cumulative counts map order-statistic
+    ranks to buckets) and computable WITHOUT a min/max pass, which is
+    the whole point: the grouped selection skips the stats scan the
+    equi-width histogram needs.  Spark's ``log2`` is
+    ``StrictMath.log(x) / StrictMath.log(2)``: ``StrictMath.log`` is
+    semi-monotonic, and the division by a positive constant, the exact
+    ×16 and ``floor`` keep that order.  The id is never decoded into a
+    value range — both scans recompute it with the same deterministic
+    JVM expression and match rows to buckets by id — so it need not
+    fall on exact binary edges.  Evaluated in double with one final
+    int cast: no ANSI-checked integer arithmetic per row."""
+    inf = F.lit(float("inf"))
+    mag = F.floor(F.log2(F.abs(vv)) * 16) + F.lit(_MIDBIN_OFFSET)
+    return (F.when(vv.isNull() | F.isnan(vv), F.lit(_MIDBIN_NULL))
+            .when(vv == 0, F.lit(0))
+            .when(vv == inf, F.lit(1 << 30))
+            .when(vv == -inf, F.lit(-(1 << 30)))
+            .otherwise(F.signum(vv) * mag)).cast("int")
+
+
+def _midbin_rows(df: DataFrame, keys: list, v: str) -> DataFrame:
+    """``keys…, __v, __b``: the value as double and its bucket id."""
+    val = F.col(v).cast("double")
+    return df.select(*keys, val.alias("__v"),
+                     _midbin_bucket(val).alias("__b"))
 
 
 def _midbin_hist(df: DataFrame, keys: list, v: str) -> DataFrame:
     """Stage 1 of the midbin plan: per-(group, 1/16-octave bucket) row
     counts — one map-side-combined aggregation, null/NaN rows kept
     under the sentinel bucket so all-null groups stay visible."""
-    val = F.col(v).cast("double")
-    rows = df.select(*keys, val.alias("__v"))
-    vv = F.col("__v")
-    valid = vv.isNotNull() & ~F.isnan(vv)
-    binned = rows.select(
-        *keys,
-        F.when(valid, _sortable_bin(vv))
-        .otherwise(F.lit(_MIDBIN_NULL)).alias("__b"))
-    return binned.groupBy(*keys, "__b").agg(F.count(F.lit(1)).alias("__c"))
+    return (_midbin_rows(df, keys, v).groupBy(*keys, "__b")
+            .agg(F.count(F.lit(1)).alias("__c")))
+
+
+def _midbin_candidates(df: DataFrame, keys: list, v: str,
+                       targets: DataFrame,
+                       null_safe: bool = True) -> DataFrame:
+    """Stage 2 of the midbin plan: the rows of the target buckets, by
+    one broadcast equi-join on ``(keys, __b)`` with the bucket id
+    recomputed on the scan.  ``null_safe=False`` joins on the plain
+    keys, which keeps the probe inside whole-stage codegen (measured
+    ~6× faster than a struct/null-safe key on 90M rows) — valid only
+    when no group label is NULL/NaN.  Null/NaN rows never match: no
+    target holds the :data:`_MIDBIN_NULL` bucket."""
+    from xarray_spark._utils import null_safe_join
+    rows = _midbin_rows(df, keys, v)
+    on = [*keys, "__b"]
+    if null_safe:
+        return null_safe_join(rows, F.broadcast(targets), on)
+    return rows.join(F.broadcast(targets), on=on)
 
 
 #: driver-finish gates for the midbin plan: collect the bucket table /
@@ -428,40 +443,22 @@ def _midbin_collect(hist: DataFrame, keys: list):
     return None if len(rows) > _MIDBIN_HIST_COLLECT_LIMIT else rows
 
 
-def _midbin_bucket_range(b: int):
-    """Decode a :func:`_sortable_bin` bucket id into its membership
-    test parts (kind, p, sl, sh, eq) — kind 0 = positive range, 1 =
-    negative range, 2 = equality; ranges compare ``abs(v)/p`` against
-    exact sixteenths [sl, sh) so both scans agree on every boundary."""
-    if b == 0:
-        return 2, 1.0, 0.0, 0.0, 0.0
-    if b == (1 << 30):
-        return 2, 1.0, 0.0, 0.0, float("inf")
-    if b == -(1 << 30):
-        return 2, 1.0, 0.0, 0.0, float("-inf")
-    ab = abs(b)
-    e = ab // 16 - 1100
-    sub = ab % 16
-    return ((0 if b > 0 else 1), 2.0 ** e,
-            1.0 + sub / 16.0, 1.0 + (sub + 1) / 16.0, 0.0)
-
-
 def _grouped_quantile_midbin_local(df: DataFrame, keys: list, v: str,
                                    qs: list, method: str,
                                    hist_rows: list) -> DataFrame | None:
     """Driver-finish of the midbin plan: with the per-(group, bucket)
     counts already on the driver, compute every order statistic's
     bucket in plain Python, pull ONLY candidate-bucket rows with one
-    broadcast range-join collect, and finish in numpy — mirroring
-    `_quantile_ungrouped`'s architecture, whose driver finish is why
-    the ungrouped plan runs in ~2 scans flat.  Returns None when the
+    broadcast (keys, bucket) equi-join collect, and finish in numpy —
+    mirroring `_quantile_ungrouped`'s architecture, whose driver finish
+    is why the ungrouped plan runs in ~2 scans flat.  Returns None when the
     candidate volume exceeds the collect gate (the distributed tail
     then runs)."""
-    import math as _math
-    import numpy as _np
-    from xarray_spark._utils import null_safe_join
-
     import datetime as _dt
+    import math as _math
+
+    import numpy as _np
+    from xarray_spark._utils import local_df
 
     def gkey(vals):
         out = []
@@ -537,48 +534,23 @@ def _grouped_quantile_midbin_local(df: DataFrame, keys: list, v: str,
         plans[gk] = {"n": n, "qpos": qpos, "rank_bucket": rank_bucket,
                      "bucket_cum": bucket_cum}
         for b in bucket_cum:
-            target_rows.append(g["raw"] + (b,) + _midbin_bucket_range(b))
+            target_rows.append(g["raw"] + (b,))
     if total_cand > _MIDBIN_CAND_COLLECT_LIMIT:
         return None
     spark = df.sparkSession
     key_fields = [df.schema[k] for k in keys]
-    tgt_schema = T.StructType(key_fields + [
-        T.StructField("__b", T.IntegerType()),
-        T.StructField("__kind", T.IntegerType()),
-        T.StructField("__p", T.DoubleType()),
-        T.StructField("__sl", T.DoubleType()),
-        T.StructField("__sh", T.DoubleType()),
-        T.StructField("__eq", T.DoubleType()),
-    ])
-    from xarray_spark._utils import local_df
-    tgt = local_df(spark, target_rows, tgt_schema)
-    val = F.col(v).cast("double")
-    rows = df.select(*keys, val.alias("__v"))
-    vv = F.col("__v")
-    valid = vv.isNotNull() & ~F.isnan(vv)
+    tgt = local_df(spark, target_rows, T.StructType(
+        key_fields + [T.StructField("__b", T.IntegerType())]))
     # the collected bucket table knows every group label, so the join
-    # strategy can be exact: plain primitive-key equi-join keeps the
-    # 90M-row probe inside whole-stage codegen (measured ~6× faster
-    # than a struct/null-safe key here); only actual NULL/NaN labels
-    # need the null-safe struct join
+    # can use plain keys unless a NULL/NaN label actually exists
     has_null_key = any(
         x is None or (isinstance(x, float) and x != x)
         for g in groups.values() for x in g["raw"])
-    if has_null_key:
-        cand = null_safe_join(rows.where(valid), F.broadcast(tgt), keys)
-    else:
-        cand = rows.where(valid).join(F.broadcast(tgt), on=keys)
-    sc = F.abs(vv) / F.col("__p")
-    inrange = (F.when(F.col("__kind") == 2, vv == F.col("__eq"))
-               .when(F.col("__kind") == 0,
-                     (vv > 0) & (sc >= F.col("__sl"))
-                     & (sc < F.col("__sh")))
-               .otherwise((vv < 0) & (sc >= F.col("__sl"))
-                          & (sc < F.col("__sh"))))
+    cand = _midbin_candidates(df, keys, v, tgt, null_safe=has_null_key)
     # toArrow, NOT toPandas: pandas coerces nullable ints to
     # float64+NaN, which would break key matching against the
     # collected bucket-table Rows (0 vs 0.0, None vs NaN)
-    tbl = cand.where(inrange).select(*keys, "__b", "__v").toArrow()
+    tbl = cand.select(*keys, "__b", "__v").toArrow()
     bucket_vals: dict = {}
     kcols = [tbl.column(k).to_pylist() for k in keys]
     bcol = tbl.column("__b").to_pylist()
@@ -616,7 +588,6 @@ def _grouped_quantile_midbin_local(df: DataFrame, keys: list, v: str,
         T.StructField("quantile", T.DoubleType()),
         T.StructField(v, T.DoubleType()),
     ])
-    from xarray_spark._utils import local_df
     return local_df(spark, out_rows, out_schema)
 
 
@@ -627,13 +598,13 @@ def _grouped_quantile_midbin(df: DataFrame, keys: list, v: str, qs: list,
     between the buffered aggregate and the 4-pass equi-width histogram:
 
     1. one map-side-combined ``groupBy(keys, bucket).count`` over the
-       fixed 1/16-octave buckets of :func:`_sortable_bin` (no stats
+       fixed 1/16-octave buckets of :func:`_midbin_bucket` (no stats
        pass — the buckets don't need min/max);
     2. cumulative counts locate each order statistic's bucket (tiny,
        window over ≤ a few thousand buckets per group); a broadcast
-       semi-join pulls ONLY candidate-bucket rows out of the second
-       scan, which get a per-bucket row_number — a ~n/buckets-sized
-       slice per group, never an aggregation buffer.
+       (keys, bucket) equi-join pulls ONLY candidate-bucket rows out of
+       the second scan, which get a per-bucket row_number — a
+       ~n/buckets-sized slice per group, never an aggregation buffer.
 
     Worst case (a whole group inside one 1/16-octave bucket) sorts the
     group in one task, which is why the plan is gated by
@@ -643,11 +614,6 @@ def _grouped_quantile_midbin(df: DataFrame, keys: list, v: str, qs: list,
     Returns long form: ``keys… , quantile, v`` (all-null groups kept,
     value null — same contract as the histogram plan).
     """
-    from xarray_spark._utils import null_safe_join
-    val = F.col(v).cast("double")
-    rows = df.select(*keys, val.alias("__v"))
-    vv = F.col("__v")
-    valid = vv.isNotNull() & ~F.isnan(vv)
     hist = hist_rows = None
     if probe is not None:
         hist, hist_rows = probe
@@ -660,8 +626,8 @@ def _grouped_quantile_midbin(df: DataFrame, keys: list, v: str, qs: list,
         hist_rows = _midbin_collect(hist, keys)
     if hist_rows is not None:
         # driver finish: order-statistic buckets computed in Python,
-        # one broadcast range-join collect, numpy finish — skips the
-        # window/union/explode job parade entirely
+        # one broadcast (keys, bucket) join collect, numpy finish —
+        # skips the window/union/explode job parade entirely
         local = _grouped_quantile_midbin_local(df, keys, v, qs, method,
                                                hist_rows)
         if local is not None:
@@ -682,44 +648,13 @@ def _grouped_quantile_midbin(df: DataFrame, keys: list, v: str, qs: list,
             need = need | ((n > 0) & valb & (j >= F.col("__cum"))
                            & (j < F.col("__cum") + F.col("__c")))
     targets = hist2.where(need).select(*keys, "__b", "__cum", "__n")
-    # candidate extraction joins the tiny target table (≤ 2·|qs|
-    # buckets per group) on the KEYS ONLY and tests membership by the
-    # bucket's VALUE RANGE, decoded from the bucket id on the ~rows²
-    # side of nothing (the target table) — re-evaluating _sortable_bin
-    # on the big scan would let Catalyst duplicate its CASE tree ~6×
-    # into the pushed-down join-key filter (measured 41 s vs ~2 s for
-    # the scan itself).  Membership compares ``abs(v) / 2^e`` against
-    # exact sixteenths — the same exact scaling the binning used, so
-    # the two scans agree on every boundary, subnormals included.
-    tb, ab = F.col("__b"), F.abs(F.col("__b"))
-    te = (F.floor(ab / 16) - 1100).cast("double")
-    tsub = (ab % 16).cast("double")
-    kind = (F.when((tb == 0) | (ab == F.lit(1 << 30)), F.lit(2))
-            .when(tb > 0, F.lit(0)).otherwise(F.lit(1)))
-    eqv = (F.when(tb == 0, F.lit(0.0))
-           .when(tb == F.lit(1 << 30), F.lit(float("inf")))
-           .when(tb == F.lit(-(1 << 30)), F.lit(float("-inf"))))
-    targets = targets.select(
-        *keys, "__b", "__cum", "__n", kind.alias("__kind"),
-        F.pow(F.lit(2.0), te).alias("__p"),
-        (F.lit(1.0) + tsub / 16).alias("__sl"),
-        (F.lit(1.0) + (tsub + 1) / 16).alias("__sh"),
-        eqv.alias("__eq"))
     # null-safe keys — NULL group labels survive groupBy and must
     # survive this join too
-    cand = null_safe_join(rows.where(valid), F.broadcast(targets), keys)
-    sc = F.abs(vv) / F.col("__p")
-    inrange = (F.when(F.col("__kind") == 2, vv == F.col("__eq"))
-               .when(F.col("__kind") == 0,
-                     (vv > 0) & (sc >= F.col("__sl"))
-                     & (sc < F.col("__sh")))
-               .otherwise((vv < 0) & (sc >= F.col("__sl"))
-                          & (sc < F.col("__sh"))))
-    cand = cand.where(inrange)
+    cand = _midbin_candidates(df, keys, v, targets)
     wloc = Window.partitionBy(*keys, "__b").orderBy("__v")
     ranked = cand.withColumn(
         "__i", F.col("__cum") + F.row_number().over(wloc) - 1)
-    i = F.col("__i")
+    i, vv = F.col("__i"), F.col("__v")
     cond = F.lit(False)
     pre_cols = []
     for m, (j_lo, j_hi, wgt) in enumerate(pos):
@@ -877,11 +812,6 @@ def _grouped_quantile_hist(df: DataFrame, keys: list, v: str, qs: list,
                .when(w == 1, vhi)
                .otherwise(_interp_col(vlo, vhi, w, method)))
     return res.select(*keys, F.col("__q").alias("quantile"), out_val.alias(v))
-
-
-def _is_orderable_numeric(dtype: T.DataType) -> bool:
-    from xarray_spark._utils import _TEMPORAL
-    return isinstance(dtype, _NUMERIC_TYPES + _TEMPORAL)
 
 
 #: driver-side dense-grid ceiling for the dict-style constructor — the

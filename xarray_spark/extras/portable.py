@@ -71,13 +71,6 @@ def plane_coeffs(n_planes: int, dim: int) -> list[list[int]]:
     ]
 
 
-def sql_plane_coeff(pi_expr: str, j_expr: str) -> str:
-    """The same coefficient computed inside DuckDB SQL (keeps generated
-    oracles compact — no 8k-literal VALUES tables)."""
-    h = sql_md5_long(f"'plane-' || ({pi_expr}) || '-' || ({j_expr})")
-    return f"({h} % 2001 - 1000)"
-
-
 def quantize_vec(vec: Column) -> Column:
     """floor(x * 1e6) per element as BIGINT — exact and identical in
     Spark and DuckDB (float→double is exact; double*1e6 and floor are
