@@ -1962,8 +1962,8 @@ def q114_encoded_groups(spark, sf_dir):
 def q115_grouped_quantile_hist(spark, sf_dir):
     """Grouped EXACT quantile through the round-5 distributed
     per-group histogram selection (dataset._grouped_quantile_hist) —
-    the buffer limit is forced to 1 so the gate pins the no-buffer
-    path: per-group stats, per-(group,bin) histogram, rank→bin join,
+    ``grouped_quantile_plan="hist"`` pins the no-buffer path:
+    per-group stats, per-(group,bin) histogram, rank→bin join,
     row_number only inside the ≤2 needed bins.  Oracle: DuckDB
     quantile_cont (linear interpolation, same estimator)."""
     from xarray_spark import set_options
@@ -1971,7 +1971,7 @@ def q115_grouped_quantile_hist(spark, sf_dir):
         "l_orderkey", "l_linenumber", "l_returnflag", "l_extendedprice")
     ds = XDataset(df, dims=["l_orderkey", "l_linenumber"],
                   coords={"l_returnflag": ("l_orderkey", "l_linenumber")})
-    with set_options(grouped_quantile_buffer_limit=1):
+    with set_options(grouped_quantile_plan="hist"):
         out = ds.groupby("l_returnflag").quantile(0.25)
     return out.to_spark().select(
         "l_returnflag", _r4(F.col("l_extendedprice")).alias("q_price"))
@@ -1981,10 +1981,9 @@ def q137_grouped_quantile_midbin(spark, sf_dir):
     """Grouped EXACT quantile through the round-8 MIDBIN plan
     (dataset._grouped_quantile_midbin: two-scan selection over
     1/16-octave buckets, one log2 per row, with the candidate rows
-    matched back by bucket id), pinned via the plan-picker options:
-    buffering banned above 2 rows, perf threshold 1 and fixed-cost
-    floor 0 so the probe runs, and the default midbin_limit catches (the q115
-    pattern, one plan over).  The value column is cancellation-PRONE
+    matched back by bucket id), pinned with
+    ``grouped_quantile_plan="midbin"`` (the q115 pattern, one plan
+    over).  The value column is cancellation-PRONE
     by construction — alternating-sign prices make the sorted stream
     cross zero between large near-symmetric magnitudes, the exact
     corner class where a naive one-sided lerp drifts off numpy
@@ -2000,9 +1999,7 @@ def q137_grouped_quantile_midbin(spark, sf_dir):
             .otherwise(F.lit(-1.0))).alias("v"))
     ds = XDataset(df, dims=["l_orderkey", "l_linenumber"],
                   coords={"l_returnflag": ("l_orderkey", "l_linenumber")})
-    with set_options(grouped_quantile_buffer_limit=2,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=0):
+    with set_options(grouped_quantile_plan="midbin"):
         out = ds.groupby("l_returnflag").quantile([0.25, 0.5, 0.75])
     return out.to_spark().select(
         "l_returnflag", F.col("quantile"), _r4(F.col("v")).alias("qv"))
@@ -2036,8 +2033,8 @@ def q139_resample_me_asfreq(spark, sf_dir):
 
 def q140_rolling_std_wide(spark, sf_dir):
     """WIDE-window rolling std through the Arrow-batched numpy kernel
-    (rolling.py _var_window_arrow; window 96 ≥ the
-    rolling_var_arrow_threshold picker): exact per-window two-pass —
+    (rolling.py _var_window_arrow, picked for every 1-D window of
+    width ≥ 2): exact per-window two-pass —
     vectorized sliding_window_view, not the interpreted
     F.aggregate lambda (measured 8-130× faster across widths,
     SCALE.md round 10).  Oracle replays the window-array two-pass

@@ -16,9 +16,10 @@ import warnings
 
 import numpy as np
 import pandas as pd
+import pytest
 
 sys.path.insert(0, "/root/reference")
-import xarray as xr  # noqa: E402
+xr = pytest.importorskip("xarray")
 
 from xarray_spark import XDataset  # noqa: E402
 

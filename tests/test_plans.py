@@ -395,8 +395,9 @@ def test_q137_midbin_bucket_is_one_log2_per_row(spark):
     """The midbin bucket id costs one LOG2 and no POWER per row in
     stage 1 (the exact bit-decomposition it replaced planned 20 LOG2
     and 10 POWER there); the candidate scan, which recomputes the id
-    to join on (keys, bucket), plans at most 2 LOG2 (the join-key
-    null filter Catalyst infers may repeat it) on both join paths."""
+    to join on (keys, bucket), plans exactly 1 LOG2 on both join
+    paths — the id is non-nullable, so Catalyst infers no join-key
+    null filter that would repeat it."""
     from xarray_spark import dataset as D
     df = _q137_frame(spark)
     keys = ["l_returnflag"]
@@ -407,22 +408,20 @@ def test_q137_midbin_bucket_is_one_log2_per_row(spark):
     for null_safe in (False, True):
         cand = plan_of(D._midbin_candidates(df, keys, "v", targets,
                                             null_safe=null_safe))
-        assert cand.count("LOG2(") <= 2 and "POWER(" not in cand, cand
+        assert cand.count("LOG2(") == 1 and "POWER(" not in cand, cand
         assert "BroadcastHashJoin" in cand
 
 
 def test_q137_executes_midbin_plan(spark, entry):
     """Round-9 verdict #3: q137 must actually execute the MIDBIN plan
-    — the picker must return 'midbin' under q137's options, and the
+    — the picker must return 'midbin' under q137's option, and the
     distributed tail's plan must be fed by the fixed-bucket scan, not
     a global sort: no rangepartitioning exchange anywhere, and the
     bucket-id column drives the candidate window."""
     from xarray_spark import set_options
     from xarray_spark import dataset as D
     df = _q137_frame(spark)
-    with set_options(grouped_quantile_buffer_limit=2,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=0):
+    with set_options(grouped_quantile_plan="midbin"):
         plan_name, probe = D._grouped_quantile_plan(
             df, ["l_returnflag"], probe_var="v")
         assert plan_name == "midbin"

@@ -261,7 +261,7 @@ def test_grouped_hist_quantile_equals_numpy(spark, vals, ngroups, method, q):
     pdf = pd.DataFrame({"t": range(len(vals)), "k": keys, "v": vals})
     ds = XDataset(spark.createDataFrame(pdf), dims=["t"],
                   coords={"k": ("t",)})
-    with set_options(grouped_quantile_buffer_limit=1):
+    with set_options(grouped_quantile_plan="hist"):
         got = (ds.groupby("k").quantile(q, method=method).to_pandas()
                .sort_values("k")["v"].to_numpy())
     exp = np.array([

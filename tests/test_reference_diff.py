@@ -14,9 +14,16 @@ import pandas as pd
 import pytest
 
 sys.path.insert(0, "/root/reference")
-import xarray as xr  # noqa: E402  (the reference package)
+try:
+    import xarray as xr  # noqa: E402
+except ImportError:  # the reference package is optional
+    xr = None
 
 from xarray_spark import XDataset  # noqa: E402
+
+#: tests that compare against the reference xarray package
+needs_xr = pytest.mark.skipif(xr is None,
+                              reason="reference xarray not importable")
 
 RNG = np.random.RandomState(7)
 N = 60
@@ -43,6 +50,7 @@ def _ref(series):
     return xr.DataArray(series, dims="t")
 
 
+@needs_xr
 @pytest.mark.parametrize("agg", ["mean", "sum", "min", "max", "std", "var"])
 @pytest.mark.parametrize("center", [False, True])
 def test_rolling_matches_reference(sds, series, agg, center):
@@ -52,6 +60,7 @@ def test_rolling_matches_reference(sds, series, agg, center):
     np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12, equal_nan=True)
 
 
+@needs_xr
 @pytest.mark.parametrize("agg", ["mean", "sum", "min", "max", "std", "var"])
 def test_coarsen_matches_reference(sds, series, agg):
     got = np.sort(_ours(getattr(sds.coarsen(t=7, boundary="trim"), agg)()))
@@ -60,6 +69,7 @@ def test_coarsen_matches_reference(sds, series, agg):
     np.testing.assert_allclose(got, exp, rtol=1e-9, atol=1e-12, equal_nan=True)
 
 
+@needs_xr
 def test_rolling_exp_matches_reference(sds, series):
     # reference rolling_exp needs numbagg; fall back to pandas (the
     # kernels agree) when it's absent
@@ -72,6 +82,7 @@ def test_rolling_exp_matches_reference(sds, series):
                                rtol=1e-9)
 
 
+@needs_xr
 def test_interpolate_na_matches_reference(sds, series):
     # reference 'nearest' needs scipy (absent here); linear is its
     # numpy interpolator
@@ -106,6 +117,7 @@ def test_ffill_bfill_matches_pandas(sds, series):
     np.testing.assert_allclose(got_b, exp_b, equal_nan=True)
 
 
+@needs_xr
 def test_diff_cumsum_shift_match_reference(sds, series):
     np.testing.assert_allclose(
         np.sort(_ours(sds.diff("t"))), np.sort(_ref(series).diff("t").values),
@@ -117,6 +129,7 @@ def test_diff_cumsum_shift_match_reference(sds, series):
         _ours(sds.shift(t=3)), _ref(series).shift(t=3).values, equal_nan=True)
 
 
+@needs_xr
 @pytest.mark.parametrize("q", [0.1, 0.5, 0.9])
 @pytest.mark.parametrize("method", ["linear", "lower", "higher", "nearest",
                                     "midpoint"])
@@ -134,6 +147,7 @@ def test_rank_matches_pandas(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_weighted_matches_reference(spark):
     vals = RNG.rand(30).round(6)
     wts = RNG.rand(30).round(6)
@@ -151,6 +165,7 @@ def test_weighted_matches_reference(spark):
         np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 def test_groupby_matches_reference(spark):
     vals = RNG.randn(40).round(6)
     keys = RNG.randint(0, 4, 40)
@@ -165,6 +180,7 @@ def test_groupby_matches_reference(spark):
         np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 def test_resample_matches_reference(spark):
     times = pd.date_range("2001-01-01", periods=90, freq="D")
     vals = RNG.randn(90).round(6)
@@ -179,6 +195,7 @@ def test_resample_matches_reference(spark):
     np.testing.assert_allclose(got["v"].to_numpy(), ref.values, rtol=1e-9)
 
 
+@needs_xr
 def test_pad_matches_reference(sds, series):
     for mode in ("edge", "reflect", "symmetric", "wrap"):
         got = (sds.pad(t=(2, 3), mode=mode).to_pandas()
@@ -187,6 +204,7 @@ def test_pad_matches_reference(sds, series):
         np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_idxmax_argmax_match_reference(spark):
     vals = RNG.randn(25).round(6)
     ref = xr.DataArray(vals, dims="t", coords={"t": np.arange(25)})
@@ -196,6 +214,7 @@ def test_idxmax_argmax_match_reference(spark):
     assert ds.argmax("t").to_pandas()["v"].iloc[0] == int(ref.argmax("t"))
 
 
+@needs_xr
 def test_dt_fields_match_reference(spark):
     times = pd.date_range("1999-11-25 13:45:05", periods=50, freq="37h")
     ref = xr.DataArray(times, dims="i")
@@ -217,6 +236,7 @@ def test_dt_fields_match_reference(spark):
 # wave 2: computation / alignment / reshape
 # ------------------------------------------------------------------ #
 
+@needs_xr
 def test_integrate_differentiate_match_reference(spark):
     x = np.sort(RNG.rand(30)).astype("float64")
     y = np.sin(x * 6).round(6)
@@ -229,6 +249,7 @@ def test_integrate_differentiate_match_reference(spark):
     np.testing.assert_allclose(got_d, ref.differentiate("t").values, rtol=1e-9)
 
 
+@needs_xr
 def test_polyfit_polyval_match_reference(spark):
     x = np.arange(25.0)
     y = (0.5 * x ** 2 - 3 * x + 7 + RNG.randn(25) * 0.01).round(6)
@@ -242,6 +263,7 @@ def test_polyfit_polyval_match_reference(spark):
     np.testing.assert_allclose(np.sort(got), exp, rtol=1e-6)
 
 
+@needs_xr
 def test_cov_corr_match_reference(spark):
     a = RNG.randn(40).round(6)
     b = (a * 0.5 + RNG.randn(40) * 0.3).round(6)
@@ -258,6 +280,7 @@ def test_cov_corr_match_reference(spark):
         corr(da, db).to_pandas().iloc[0, 0], float(xr.corr(ra, rb)), rtol=1e-9)
 
 
+@needs_xr
 def test_groupby_bins_matches_reference(spark):
     vals = RNG.randn(50).round(6)
     x = RNG.rand(50).round(6)
@@ -271,6 +294,7 @@ def test_groupby_bins_matches_reference(spark):
                                np.sort(ref.values), rtol=1e-9)
 
 
+@needs_xr
 def test_where_clip_match_reference(sds, series):
     from pyspark.sql import functions as F
     got = _ours(sds.where(F.col("v") > 0))
@@ -281,6 +305,7 @@ def test_where_clip_match_reference(sds, series):
     np.testing.assert_allclose(got_c, exp_c, equal_nan=True)
 
 
+@needs_xr
 def test_cumprod_prod_match_reference(spark):
     vals = (RNG.rand(20) + 0.5).round(6)
     ref = xr.DataArray(vals, dims="t")
@@ -292,6 +317,7 @@ def test_cumprod_prod_match_reference(spark):
         ds.prod("t").to_pandas()["v"].iloc[0], float(ref.prod("t")), rtol=1e-9)
 
 
+@needs_xr
 def test_reindex_interp_match_reference(spark):
     x = np.arange(0.0, 20.0, 2.0)
     y = (x ** 1.5).round(6)
@@ -310,6 +336,7 @@ def test_reindex_interp_match_reference(spark):
     np.testing.assert_allclose(got_r, exp_r, equal_nan=True)
 
 
+@needs_xr
 def test_season_groupby_matches_reference(spark):
     times = pd.date_range("2000-01-01", periods=400, freq="D")
     vals = RNG.randn(400).round(6)
@@ -358,6 +385,7 @@ def grid2d(spark):
     return ref, ours
 
 
+@needs_xr
 @pytest.mark.parametrize("dim", ["x", "y"])
 @pytest.mark.parametrize("agg", ["mean", "sum", "min", "std"])
 def test_2d_reduction_matches_reference(grid2d, dim, agg):
@@ -369,6 +397,7 @@ def test_2d_reduction_matches_reference(grid2d, dim, agg):
     np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 def test_2d_rolling_one_dim_matches_reference(grid2d):
     ref, ours = grid2d
     got = (ours.rolling(y=3, min_periods=1).mean().to_pandas()
@@ -377,6 +406,7 @@ def test_2d_rolling_one_dim_matches_reference(grid2d):
     np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 def test_2d_argmax_matches_reference(grid2d):
     ref, ours = grid2d
     got = ours.argmax(["x", "y"]).to_pandas()["v"].iloc[0]
@@ -384,6 +414,7 @@ def test_2d_argmax_matches_reference(grid2d):
     assert got["x"] == int(exp["x"]) and got["y"] == int(exp["y"])
 
 
+@needs_xr
 def test_stack_matches_reference(grid2d):
     ref, ours = grid2d
     exp = ref.stack(z=("x", "y")).values
@@ -394,6 +425,7 @@ def test_stack_matches_reference(grid2d):
     np.testing.assert_allclose(zs["v"].to_numpy(), exp, rtol=1e-12)
 
 
+@needs_xr
 def test_roll_matches_reference(sds, series):
     got = _ours(sds.roll(t=4))
     # reference roll shifts DATA, keeps labels
@@ -401,6 +433,7 @@ def test_roll_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_dropna_fillna_match_reference(sds, series):
     assert (sds.dropna("t").to_spark().count()
             == int(_ref(series).dropna("t").size))
@@ -409,6 +442,7 @@ def test_dropna_fillna_match_reference(sds, series):
     np.testing.assert_allclose(got, exp)
 
 
+@needs_xr
 def test_thin_head_tail_match_reference(sds, series):
     np.testing.assert_allclose(
         np.sort(_ours(sds.thin(t=5))), np.sort(_ref(series).thin(t=5).values),
@@ -421,6 +455,7 @@ def test_thin_head_tail_match_reference(sds, series):
         equal_nan=True)
 
 
+@needs_xr
 def test_isocalendar_dayofweek_match_reference(spark):
     times = pd.date_range("2014-12-25", periods=30, freq="D")
     ref = xr.DataArray(times, dims="i")
@@ -437,6 +472,7 @@ def test_isocalendar_dayofweek_match_reference(spark):
     np.testing.assert_array_equal(got_weeks, exp_weeks)
 
 
+@needs_xr
 def test_weighted_mean_with_nan_matches_reference(spark):
     vals = RNG.randn(20).round(6)
     vals[[3, 9]] = np.nan
@@ -448,6 +484,7 @@ def test_weighted_mean_with_nan_matches_reference(spark):
     np.testing.assert_allclose(got, float(ref.mean()), rtol=1e-9)
 
 
+@needs_xr
 def test_cumulative_matches_reference(sds, series):
     got = _ours(sds.cumulative("t").sum())
     exp = _ref(series).cumulative("t").sum().values
@@ -458,6 +495,7 @@ def test_cumulative_matches_reference(sds, series):
 # wave 4: align/concat/merge/combine + resample variants + groupby ops
 # ------------------------------------------------------------------ #
 
+@needs_xr
 def test_align_matches_reference(spark):
     a_vals = RNG.randn(10).round(6)
     b_vals = RNG.randn(10).round(6)
@@ -479,6 +517,7 @@ def test_align_matches_reference(spark):
             equal_nan=True, err_msg=f"{join} right")
 
 
+@needs_xr
 def test_concat_matches_reference(spark):
     a_vals = RNG.randn(6).round(6)
     b_vals = RNG.randn(4).round(6)
@@ -495,6 +534,7 @@ def test_concat_matches_reference(spark):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_binary_op_auto_align_matches_reference(spark):
     a_vals = RNG.randn(8).round(6)
     b_vals = RNG.randn(8).round(6)
@@ -510,6 +550,7 @@ def test_binary_op_auto_align_matches_reference(spark):
 
 
 # our 'W' is the ISO week (Mon-Sun) = pandas weeks ending Sunday
+@needs_xr
 @pytest.mark.parametrize("freq_ours,freq_ref", [("W", "W-SUN"), ("7D", "7D")])
 def test_resample_weekly_matches_reference(spark, freq_ours, freq_ref):
     times = pd.date_range("2001-03-01", periods=60, freq="D")
@@ -532,6 +573,7 @@ def test_resample_weekly_matches_reference(spark, freq_ours, freq_ref):
                                    rtol=1e-9)
 
 
+@needs_xr
 def test_groupby_binary_op_matches_reference(spark):
     vals = RNG.randn(30).round(6)
     keys = RNG.randint(0, 3, 30)
@@ -544,6 +586,7 @@ def test_groupby_binary_op_matches_reference(spark):
     np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 def test_combine_first_matches_reference(spark):
     a_vals = RNG.randn(8).round(6); a_vals[[2, 5]] = np.nan
     b_vals = RNG.randn(8).round(6)
@@ -582,6 +625,7 @@ def test_ufuncs_match_reference(sds, series):
                                    equal_nan=True, err_msg=name)
 
 
+@needs_xr
 def test_expand_swap_transpose_match_reference(grid2d):
     from pyspark.sql import functions as F
     ref, ours = grid2d
@@ -592,6 +636,7 @@ def test_expand_swap_transpose_match_reference(grid2d):
     assert "x2" in sw.dims and "x" not in sw.dims
 
 
+@needs_xr
 def test_idxmin_with_nans_matches_reference(spark):
     vals = RNG.randn(15).round(6)
     vals[[0, 7]] = np.nan
@@ -601,6 +646,7 @@ def test_idxmin_with_nans_matches_reference(spark):
     assert ds.idxmin("t").to_pandas()["v"].iloc[0] == int(ref.idxmin("t"))
 
 
+@needs_xr
 def test_sortby_matches_reference(spark):
     vals = RNG.randn(12).round(6)
     key = RNG.randn(12).round(6)
@@ -638,6 +684,7 @@ def test_cf_time_decode_matches_reference(spark):
     np.testing.assert_array_equal(got, exp.astype("datetime64[ns]"))
 
 
+@needs_xr
 def test_cf_mask_scale_matches_reference(spark):
     """mask_and_scale decoding (scale_factor/add_offset/_FillValue) vs
     the reference's conventions.decode_cf."""
@@ -656,6 +703,7 @@ def test_cf_mask_scale_matches_reference(spark):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_apply_ufunc_matches_reference(sds, series):
     from xarray_spark.computation import apply_ufunc
     got = (apply_ufunc(np.square, sds).to_pandas()
@@ -664,6 +712,7 @@ def test_apply_ufunc_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, rtol=1e-12, equal_nan=True)
 
 
+@needs_xr
 def test_groupby_quantile_matches_reference(spark):
     vals = RNG.randn(40).round(6)
     keys = RNG.randint(0, 3, 40)
@@ -676,6 +725,7 @@ def test_groupby_quantile_matches_reference(spark):
     np.testing.assert_allclose(got, ref.values, rtol=1e-9)
 
 
+@needs_xr
 def test_unstack_roundtrip_matches_reference(grid2d):
     ref, ours = grid2d
     # stack -> unstack returns to the original grid in both engines
@@ -689,6 +739,7 @@ def test_unstack_roundtrip_matches_reference(grid2d):
 # wave 7: merge/combine_by_coords, encode->decode roundtrip, isel grids
 # ------------------------------------------------------------------ #
 
+@needs_xr
 def test_merge_matches_reference(spark):
     a_vals = RNG.randn(8).round(6)
     b_vals = RNG.randn(8).round(6)
@@ -705,6 +756,7 @@ def test_merge_matches_reference(spark):
     np.testing.assert_allclose(got["b"].to_numpy(), exp["b"].values)
 
 
+@needs_xr
 def test_combine_by_coords_matches_reference(spark):
     v1 = RNG.randn(5).round(6)
     v2 = RNG.randn(5).round(6)
@@ -721,6 +773,7 @@ def test_combine_by_coords_matches_reference(spark):
     np.testing.assert_allclose(got, exp)
 
 
+@needs_xr
 def test_isel_grid_matches_reference(grid2d):
     ref, ours = grid2d
     exp = ref.isel(x=[1, 3], y=slice(2, 6)).values
@@ -729,6 +782,7 @@ def test_isel_grid_matches_reference(grid2d):
     np.testing.assert_allclose(got, exp)
 
 
+@needs_xr
 def test_isel_negative_matches_reference(sds, series):
     got = sds.isel(t=-1).to_pandas()["v"].iloc[0]
     exp = float(_ref(series).isel(t=-1))
@@ -738,12 +792,14 @@ def test_isel_negative_matches_reference(sds, series):
         assert got == exp
 
 
+@needs_xr
 def test_assign_arith_pipe_match_reference(sds, series):
     got = _ours((sds * 2 + 1).pipe(lambda d: d - 0.5))
     exp = ((_ref(series) * 2 + 1) - 0.5).values
     np.testing.assert_allclose(got, exp, rtol=1e-12, equal_nan=True)
 
 
+@needs_xr
 def test_outer_align_keeps_other_dim_coords(spark):
     """Wave 8: a coord keyed on the NON-aligned dim must stay populated
     on rows synthesized by outer align (reference keeps non-aligned
@@ -783,6 +839,7 @@ def test_outer_align_keeps_other_dim_coords(spark):
         gp["v"].to_numpy(), ea.values.ravel(), equal_nan=True)
 
 
+@needs_xr
 def test_sel_method_unmatched_raises_like_reference(spark, sds, series):
     """Wave 8: list-valued sel(method=, tolerance=) with an unmatched
     request raises KeyError (reference: pandas get_indexer -1 →
@@ -799,6 +856,7 @@ def test_sel_method_unmatched_raises_like_reference(spark, sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_encoded_groups_matches_reference(spark):
     """Wave 8: groupby with precomputed integer codes (EncodedGroups,
     reference groupers.py:78) — same codes, same labels, same means;
@@ -832,6 +890,7 @@ def test_encoded_groups_matches_reference(spark):
     assert list(got["code"]) == list(exp["key"].values)
 
 
+@needs_xr
 def test_datatree_map_filter_match_reference(spark):
     """Wave 8: DataTree map_over_datasets + filter vs the reference's
     DataTree (xarray/core/datatree.py)."""
@@ -861,6 +920,7 @@ def test_datatree_map_filter_match_reference(spark):
     assert got_paths == rkept
 
 
+@needs_xr
 def test_cf_encode_decode_roundtrip_matches_reference(spark):
     """Wave 8: bytes encoded by the REFERENCE's CF coders
     (scale_factor/add_offset/_FillValue) decode through this engine's
@@ -889,6 +949,7 @@ def test_cf_encode_decode_roundtrip_matches_reference(spark):
                                rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_isel_points_matches_reference(grid2d):
     """Wave 8: vectorized (pointwise) indexing — parallel index arrays
     make a new points dim, matching the reference's vectorized isel."""
@@ -902,6 +963,7 @@ def test_isel_points_matches_reference(grid2d):
     np.testing.assert_allclose(got, exp)
 
 
+@needs_xr
 @pytest.mark.parametrize("which", ["argmin", "argmax"])
 def test_rolling_argminmax_matches_reference(spark, which):
     """Wave 8: rolling argmin/argmax (q111's operator) vs the
@@ -917,6 +979,7 @@ def test_rolling_argminmax_matches_reference(spark, which):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_grouped_hist_quantile_matches_reference(spark):
     """Wave 8: the round-5 distributed per-group histogram quantile
     path (buffer limit forced to 1) against the reference's
@@ -930,18 +993,19 @@ def test_grouped_hist_quantile_matches_reference(spark):
     ds = XDataset(spark.createDataFrame(
         pd.DataFrame({"t": np.arange(120), "k": keys, "v": vals})),
         dims=["t"], coords={"k": ("t",)})
-    with set_options(grouped_quantile_buffer_limit=1):
+    with set_options(grouped_quantile_plan="hist"):
         got = (ds.groupby("k").quantile(0.2).to_pandas().sort_values("k")
                ["v"].to_numpy())
     np.testing.assert_allclose(got, ref.sel(quantile=0.2).values,
                                rtol=1e-9)
-    with set_options(grouped_quantile_buffer_limit=1):
+    with set_options(grouped_quantile_plan="hist"):
         got = (ds.groupby("k").quantile(0.8).to_pandas().sort_values("k")
                ["v"].to_numpy())
     np.testing.assert_allclose(got, ref.sel(quantile=0.8).values,
                                rtol=1e-9)
 
 
+@needs_xr
 def test_sel_label_slice_step_matches_reference(spark):
     vals = RNG.randn(60).round(6)
     labels = np.arange(0, 120, 2)
@@ -957,6 +1021,7 @@ def test_sel_label_slice_step_matches_reference(spark):
                                    err_msg=str(sl))
 
 
+@needs_xr
 def test_interp_targets_match_reference(spark):
     """Wave 8: interp() onto explicit targets incl. EXACT-HIT labels
     (the q62 shape) vs the reference's linear interp."""
@@ -974,6 +1039,7 @@ def test_interp_targets_match_reference(spark):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_shift_negative_and_diff2_match_reference(sds, series):
     got = _ours(sds.shift(t=-2))
     exp = _ref(series).shift(t=-2).values
@@ -984,6 +1050,7 @@ def test_shift_negative_and_diff2_match_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_coarsen_construct_matches_reference(sds, series):
     """Wave 8: coarsen.construct window reshaping vs reference."""
     exp = _ref(series)[:56].coarsen(t=7).construct(t=("t0", "win"))
@@ -994,12 +1061,14 @@ def test_coarsen_construct_matches_reference(sds, series):
         gp["v"].to_numpy().reshape(8, 7), exp.values, equal_nan=True)
 
 
+@needs_xr
 def test_where_drop_matches_reference(sds, series):
     exp = _ref(series).where(_ref(series) > 0, drop=True).values
     got = np.sort(_ours(sds.where(sds["v"] > 0, drop=True)))
     np.testing.assert_allclose(got, np.sort(exp), equal_nan=True)
 
 
+@needs_xr
 def test_fillna_matches_reference(sds, series):
     got = _ours(sds.fillna(0.25))
     exp = _ref(series).fillna(0.25).values
@@ -1012,6 +1081,7 @@ def test_rank_pct_matches_pandas(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_broadcast_like_matches_reference(spark):
     a = xr.DataArray(RNG.randn(4).round(6), dims="x",
                      coords={"x": np.arange(4)})
@@ -1030,6 +1100,7 @@ def test_broadcast_like_matches_reference(spark):
         np.broadcast_to(exp.transpose("x", "y").values, (4, 3)))
 
 
+@needs_xr
 def test_drop_duplicates_matches_reference(spark):
     vals = np.array([3.0, 1.0, 3.0, 2.0, 1.0, 5.0])
     ref = xr.Dataset({"v": ("t", vals)},
@@ -1041,6 +1112,7 @@ def test_drop_duplicates_matches_reference(spark):
     np.testing.assert_allclose(got["v"].to_numpy(), exp["v"].values)
 
 
+@needs_xr
 def test_to_stacked_array_roundtrip_matches_reference(spark):
     """to_stacked_array / to_unstacked_dataset round-trip preserves the
     reference's variable stacking semantics."""
@@ -1063,6 +1135,7 @@ def test_to_stacked_array_roundtrip_matches_reference(spark):
     np.testing.assert_allclose(bp["b"].to_numpy(), b)
 
 
+@needs_xr
 def test_argsort_matches_reference(sds, series):
     """Wave 9: argsort (inverse sort permutation) vs numpy/reference —
     NaN-free slice (numpy puts NaN last; ours nulls_last matches, but
@@ -1079,6 +1152,7 @@ def test_argsort_matches_reference(sds, series):
     np.testing.assert_array_equal(got, exp)
 
 
+@needs_xr
 @pytest.mark.parametrize("q", [0.1, 0.5, 0.9])
 def test_weighted_quantile_grid_matches_reference(spark, q):
     """Wave 9: weighted quantile across the q grid (the reference's
@@ -1095,6 +1169,7 @@ def test_weighted_quantile_grid_matches_reference(spark, q):
     np.testing.assert_allclose(got, exp, rtol=1e-9)
 
 
+@needs_xr
 @pytest.mark.parametrize("method", [
     "median_unbiased", "normal_unbiased", "inverted_cdf",
     "averaged_inverted_cdf", "closest_observation"])
@@ -1109,6 +1184,7 @@ def test_quantile_tail_methods_match_reference(sds, series, method):
                                    err_msg=f"{method} q={q}")
 
 
+@needs_xr
 def test_groupby_bins_left_closed_matches_reference(spark):
     vals = RNG.rand(50).round(6) * 100
     ref = (xr.DataArray(vals, dims="t")
@@ -1128,6 +1204,7 @@ def test_groupby_bins_left_closed_matches_reference(spark):
                                    exp_v, rtol=1e-9)
 
 
+@needs_xr
 def test_convert_calendar_roundtrip_matches_reference(spark):
     """Wave 9: standard→noleap drops Feb 29 and keeps values; the
     reference needs the cftime package for the target calendar — skip
@@ -1151,6 +1228,7 @@ def test_convert_calendar_roundtrip_matches_reference(spark):
                                    np.sort(surv["v"].to_numpy()))
 
 
+@needs_xr
 def test_rolling_construct_stride_matches_reference(sds, series):
     """Wave 9: rolling.construct(stride=) subsampling vs reference."""
     exp = (_ref(series).rolling(t=4).construct("win", stride=3).values)
@@ -1164,6 +1242,7 @@ def test_rolling_construct_stride_matches_reference(sds, series):
 # wave 10: sparse unstack/densify, resample fill family, coarsen pad,
 #          multi-dim arg-reduce dict form, season grouper
 # ------------------------------------------------------------------ #
+@needs_xr
 def test_densify_missing_combos_matches_reference(spark):
     """Unstack with missing combinations: the reference materializes
     NaN holes (core/dataset.py:5546 _unstack_full_reindex); long form
@@ -1182,6 +1261,7 @@ def test_densify_missing_combos_matches_reference(spark):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 @pytest.mark.parametrize("meth", ["asfreq", "pad", "backfill", "nearest"])
 def test_resample_fill_methods_match_reference(spark, meth):
     """Wave 10: upsampling resample fill family (core/resample.py:383
@@ -1198,6 +1278,7 @@ def test_resample_fill_methods_match_reference(spark, meth):
     np.testing.assert_allclose(gp["v"].to_numpy(), exp, equal_nan=True)
 
 
+@needs_xr
 def test_coarsen_pad_boundary_matches_reference(sds, series):
     """Wave 10: boundary='pad' NaN-pads the ragged tail block in the
     reference (computation/rolling.py:1023); the long form's absent
@@ -1207,6 +1288,7 @@ def test_coarsen_pad_boundary_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_argmin_dict_form_matches_reference(grid2d):
     """Wave 10: multi-dim argmin dict form (core/variable.py:2491) —
     the (x, y) position pair of the grid minimum, first occurrence."""
@@ -1219,6 +1301,7 @@ def test_argmin_dict_form_matches_reference(grid2d):
     assert int(out["py"][0]) == int(exp["y"].values)
 
 
+@needs_xr
 def test_season_grouper_matches_reference(spark):
     """Wave 10: SeasonGrouper means vs the reference grouper
     (xarray/groupers.py:801), incl. the cross-year DJF wrap."""
@@ -1248,6 +1331,7 @@ def test_season_grouper_matches_reference(spark):
 # wave 11: weighted sums, cumprod, shift fill_value, skipna=False,
 #          str accessor matrix, DataTree reductions
 # ------------------------------------------------------------------ #
+@needs_xr
 def test_weighted_sums_match_reference(spark):
     """Wave 11: sum_of_weights / sum_of_squares (computation/weighted.py)
     — NaN values mask their weights out of both statistics."""
@@ -1267,6 +1351,7 @@ def test_weighted_sums_match_reference(spark):
         float(ref.sum_of_squares()), rtol=1e-9)
 
 
+@needs_xr
 def test_cumprod_matches_reference(sds, series):
     """Wave 11: cumprod with NaN skip (generated _aggregations.py)."""
     got = _ours(sds.cumprod("t"))
@@ -1274,6 +1359,7 @@ def test_cumprod_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_shift_fill_value_matches_reference(sds, series):
     """Wave 11: shift(fill_value=) replaces the vacated slots
     (core/dataset.py:7967) instead of leaving NaN."""
@@ -1282,6 +1368,7 @@ def test_shift_fill_value_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_skipna_false_matches_reference(sds, series):
     """Wave 11: skipna=False poisons the reduction with NaN like the
     reference (series has 4 NaNs, so every result is NaN); skipna=True
@@ -1295,6 +1382,7 @@ def test_skipna_false_matches_reference(sds, series):
         np.testing.assert_allclose(got_t, exp_t, rtol=1e-9)
 
 
+@needs_xr
 def test_str_accessor_matrix_matches_reference(spark):
     """Wave 11: .str accessor ops vs the reference's numpy-object
     accessor (core/accessor_str.py) on mixed-case padded strings."""
@@ -1332,6 +1420,7 @@ def test_str_accessor_matrix_matches_reference(spark):
             assert got.tolist() == exp.tolist(), meth
 
 
+@needs_xr
 def test_datatree_reduction_matches_reference(spark):
     """Wave 11: per-node DataTree reductions (mean over the node's
     dataset) vs the reference DataTree."""
@@ -1357,6 +1446,7 @@ def test_datatree_reduction_matches_reference(spark):
 #          modes, groupby first/last, combine_nested, align override,
 #          searchsorted
 # ------------------------------------------------------------------ #
+@needs_xr
 def test_dt_floor_ceil_round_matches_reference(spark):
     """Wave 12: dt.floor/ceil/round vs the reference accessor
     (core/accessor_dt.py:288-330)."""
@@ -1373,6 +1463,7 @@ def test_dt_floor_ceil_round_matches_reference(spark):
         np.testing.assert_array_equal(got, exp, err_msg=f"{meth}({freq_r})")
 
 
+@needs_xr
 def test_dt_strftime_matches_reference(spark):
     times = pd.date_range("1999-12-28 23:59:05", periods=20, freq="11h")
     pdf = pd.DataFrame({"i": np.arange(20), "v": times})
@@ -1384,6 +1475,7 @@ def test_dt_strftime_matches_reference(spark):
     assert got == exp.tolist()
 
 
+@needs_xr
 def test_timedelta_fields_match_reference(spark):
     """Wave 12: TimedeltaAccessor days/seconds/total_seconds
     (core/accessor_dt.py:574)."""
@@ -1409,6 +1501,7 @@ def test_timedelta_fields_match_reference(spark):
         ref.dt.total_seconds().values)
 
 
+@needs_xr
 @pytest.mark.parametrize("mode", ["maximum", "mean", "minimum"])
 def test_pad_stat_modes_match_reference(spark, mode):
     """Wave 12: np.pad statistic modes through the reference pad
@@ -1423,6 +1516,7 @@ def test_pad_stat_modes_match_reference(spark, mode):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_groupby_first_last_match_reference(spark):
     vals = RNG.randn(30).round(6)
     keys = RNG.randint(0, 5, 30)
@@ -1436,6 +1530,7 @@ def test_groupby_first_last_match_reference(spark):
         np.testing.assert_allclose(got, exp, rtol=1e-12)
 
 
+@needs_xr
 def test_combine_nested_matches_reference(spark):
     a_vals = RNG.randn(6).round(6)
     b_vals = RNG.randn(6).round(6)
@@ -1453,6 +1548,7 @@ def test_combine_nested_matches_reference(spark):
     np.testing.assert_allclose(got, exp, rtol=1e-12)
 
 
+@needs_xr
 def test_align_override_matches_reference(spark):
     """join='override': the right object keeps its values but takes the
     left's labels verbatim (core/alignment.py)."""
@@ -1488,6 +1584,7 @@ def test_searchsorted_matches_numpy(spark):
 #          min_periods, groupby.map, reindex nearest+tolerance,
 #          map_blocks, groupby.reduce
 # ------------------------------------------------------------------ #
+@needs_xr
 @pytest.mark.parametrize("unit", ["s", "h"])
 def test_differentiate_datetime_unit_matches_reference(spark, unit):
     """Wave 13: gradient over a datetime coord in a chosen unit
@@ -1506,6 +1603,7 @@ def test_differentiate_datetime_unit_matches_reference(spark, unit):
     np.testing.assert_allclose(got_i, exp_i, rtol=1e-9)
 
 
+@needs_xr
 def test_rolling_default_min_periods_matches_reference(sds, series):
     """Wave 13: min_periods defaults to the window size (NaN until the
     window fills — computation/rolling.py:120)."""
@@ -1514,6 +1612,7 @@ def test_rolling_default_min_periods_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_groupby_map_matches_reference(spark):
     """Wave 13: GroupBy.map with an arbitrary block function
     (core/groupby.py:1614) — per-group demeaning."""
@@ -1534,6 +1633,7 @@ def test_groupby_map_matches_reference(spark):
     np.testing.assert_allclose(got, ref.values, rtol=1e-9)
 
 
+@needs_xr
 def test_groupby_reduce_matches_reference(spark):
     """Wave 13: GroupBy.reduce with a numpy callable (nan-ptp)."""
     vals = RNG.randn(40).round(6)
@@ -1547,6 +1647,7 @@ def test_groupby_reduce_matches_reference(spark):
     np.testing.assert_allclose(got, ref.values, rtol=1e-9)
 
 
+@needs_xr
 def test_reindex_nearest_tolerance_matches_reference(spark):
     """Wave 13: reindex(method='nearest', tolerance=) — unmatched
     targets materialize as NaN rows (core/dataset.py:3721)."""
@@ -1565,6 +1666,7 @@ def test_reindex_nearest_tolerance_matches_reference(spark):
                                rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_map_blocks_matches_reference(spark):
     """Wave 13: map_blocks with a block-local transform
     (core/parallel.py:228); blockwise x*2+1 is partition-invariant."""
@@ -1586,6 +1688,7 @@ def test_map_blocks_matches_reference(spark):
 # ------------------------------------------------------------------ #
 # wave 14: Python slice semantics of the str accessor
 # ------------------------------------------------------------------ #
+@needs_xr
 def test_str_slice_grid_matches_reference(spark):
     """Wave 14: str.slice over a (start, stop, step) grid incl.
     negatives and reversals, plus get() with negative indices — Python
@@ -1609,6 +1712,7 @@ def test_str_slice_grid_matches_reference(spark):
         assert got == exp, ("get", i)
 
 
+@needs_xr
 def test_str_partition_split_wrap_translate_match_reference(spark):
     """Wave 14b: partition/rpartition (Python tuple semantics incl. the
     no-separator case), whitespace split, split maxsplit tail-merge,
@@ -1646,6 +1750,7 @@ def test_str_partition_split_wrap_translate_match_reference(spark):
     assert da.str.find("zzz").to_pandas()["s"].tolist() == [-1] * len(words)
 
 
+@needs_xr
 def test_dt_field_sweep_matches_reference(spark):
     """Wave 14c: every shared dt accessor field vs the reference on a
     microsecond-bearing, year-crossing series (accessor_dt.py)."""
@@ -1677,6 +1782,7 @@ def test_dt_field_sweep_matches_reference(spark):
 # ------------------------------------------------------------------ #
 # wave 15: IEEE float semantics — division family, ufunc corner grid
 # ------------------------------------------------------------------ #
+@needs_xr
 def test_division_ieee_semantics_match_reference(spark):
     """Wave 15: x/0 → ±inf, 0/0 → nan, % floored like Python — the
     reference computes with numpy floats; Spark's raw `/` and `%`
@@ -1730,6 +1836,7 @@ def test_ufunc_corner_grid_matches_numpy(spark):
                                        equal_nan=True, err_msg=name)
 
 
+@needs_xr
 def test_round_half_even_and_unicode_predicates_match_reference(spark):
     """Wave 15b: np.round is banker's rounding; str predicates are
     Unicode character classes, not ASCII ranges."""
@@ -1755,6 +1862,7 @@ def test_round_half_even_and_unicode_predicates_match_reference(spark):
 # ------------------------------------------------------------------ #
 # wave 16: resample closed/label/offset + end-anchored ME
 # ------------------------------------------------------------------ #
+@needs_xr
 @pytest.mark.parametrize("closed,label", [("left", "left"), ("left", "right"),
                                           ("right", "left"), ("right", "right")])
 def test_resample_closed_label_match_reference(spark, closed, label):
@@ -1774,6 +1882,7 @@ def test_resample_closed_label_match_reference(spark, closed, label):
     np.testing.assert_allclose(gp["v"].to_numpy(), exp.values, rtol=1e-9)
 
 
+@needs_xr
 def test_resample_offset_matches_reference(spark):
     times = pd.date_range("2001-01-01", periods=50, freq="150min")
     vals = RNG.randn(50).round(6)
@@ -1789,6 +1898,7 @@ def test_resample_offset_matches_reference(spark):
     np.testing.assert_allclose(gp["v"].to_numpy(), exp.values, rtol=1e-9)
 
 
+@needs_xr
 def test_resample_month_end_matches_reference(spark):
     """Wave 16: 'ME' — right-closed month bins labeled at month ends."""
     times = pd.date_range("2001-01-28", periods=40, freq="31h")
@@ -1804,6 +1914,7 @@ def test_resample_month_end_matches_reference(spark):
     np.testing.assert_allclose(gp["v"].to_numpy(), exp.values, rtol=1e-9)
 
 
+@needs_xr
 def test_assign_coords_tuple_form_matches_reference(spark):
     """Wave 16b: assign_coords(k=("t", values)) — positional values
     along a named dim, the everyday xarray idiom (core/common.py:467)."""
@@ -1819,6 +1930,7 @@ def test_assign_coords_tuple_form_matches_reference(spark):
     np.testing.assert_allclose(got["v"].to_numpy(), ref.values)
 
 
+@needs_xr
 def test_attr_access_and_setitem_match_reference(spark):
     """Wave 16c: ds.varname attribute access and ds[k] = value
     assignment (incl. the ("dim", values) tuple form) — the everyday
@@ -1835,6 +1947,7 @@ def test_attr_access_and_setitem_match_reference(spark):
     assert "w" in ds.data_vars
 
 
+@needs_xr
 def test_resample_origin_matches_reference(spark):
     """Wave 16d: pandas origin anchoring — start_day default fixes the
     epoch-anchored '7D' divergence; explicit timestamp origins shift
@@ -1856,6 +1969,7 @@ def test_resample_origin_matches_reference(spark):
         np.testing.assert_allclose(gp["v"].to_numpy(), exp.values)
 
 
+@needs_xr
 def test_int_bins_and_labeled_concat_match_reference(spark):
     """Wave 16e: groupby_bins(bins=<int>) derives pandas.cut's exact
     equal-width edges (incl. the 0.1% left extension) from a tiny
@@ -1883,6 +1997,7 @@ def test_int_bins_and_labeled_concat_match_reference(spark):
     assert sorted(out["model"].unique()) == ["m1", "m2"]
 
 
+@needs_xr
 @pytest.mark.parametrize("side", ["left", "right"])
 @pytest.mark.parametrize("boundary", ["trim", "pad"])
 def test_coarsen_side_matrix_matches_reference(spark, side, boundary):
@@ -1899,6 +2014,7 @@ def test_coarsen_side_matrix_matches_reference(spark, side, boundary):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_rolling_even_center_matches_reference(sds, series):
     """Wave 16f: center=True with an EVEN window (asymmetric split)."""
     got = _ours(sds.rolling(t=4, center=True, min_periods=1).mean())
@@ -1906,6 +2022,7 @@ def test_rolling_even_center_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, rtol=1e-9, equal_nan=True)
 
 
+@needs_xr
 def test_true_nan_ingestion_matches_reference(spark):
     """Wave 17: genuine NaN DOUBLES (computed 0/0, non-Arrow ingestion)
     must behave as missing values in every skipna reduction — SQL
@@ -1943,6 +2060,7 @@ def test_true_nan_ingestion_matches_reference(spark):
         got_roll, ref.rolling(t=3, min_periods=1).mean().values, rtol=1e-12)
 
 
+@needs_xr
 def test_leading_nan_cumulative_matches_reference(sds, series):
     """Wave 17: all-NaN prefixes accumulate the identity (np.nancumsum
     0 / nancumprod 1), not NaN."""
@@ -1958,6 +2076,7 @@ def test_leading_nan_cumulative_matches_reference(sds, series):
         ref.cumprod("t").values)
 
 
+@needs_xr
 def test_quantile_skipna_false_matches_reference(spark):
     """Wave 17: quantile(skipna=False) — any NaN poisons the whole
     population's quantiles (grouped and ungrouped)."""
@@ -1975,6 +2094,7 @@ def test_quantile_skipna_false_matches_reference(spark):
     np.testing.assert_allclose(got_g, exp_g, equal_nan=True)
 
 
+@needs_xr
 @pytest.mark.parametrize("rt", ["even", "odd"])
 def test_pad_reflect_type_matches_reference(spark, rt):
     """Wave 17: pad reflect_type='odd' mirrors THROUGH the edge value
@@ -1989,6 +2109,7 @@ def test_pad_reflect_type_matches_reference(spark, rt):
     np.testing.assert_allclose(got, exp)
 
 
+@needs_xr
 def test_2d_rolling_true_nan_matches_reference(spark):
     """Wave 17b: the separable N-D rolling sweep also treats true-NaN
     doubles as missing (each pass normalizes before its window)."""
@@ -2009,6 +2130,7 @@ def test_2d_rolling_true_nan_matches_reference(spark):
         np.testing.assert_allclose(gp, exp, equal_nan=True, err_msg=kind)
 
 
+@needs_xr
 def test_merge_compat_corners_match_reference(spark):
     """Wave 18: merge compat corner grid — override picks the first
     dataset's variable wholesale (null outside its labels); equals
@@ -2038,6 +2160,7 @@ def test_merge_compat_corners_match_reference(spark):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_update_replaces_variable_matches_reference(spark):
     """Wave 18b: Dataset.update replaces the variable wholesale,
     reindexed to self's labels (core/dataset.py:5700) — labels other
@@ -2055,6 +2178,7 @@ def test_update_replaces_variable_matches_reference(spark):
                                equal_nan=True)
 
 
+@needs_xr
 def test_fillna_dataset_misaligned_matches_reference(spark):
     """Wave 18c: fillna(other) keeps SELF's shape — other's values join
     on the shared labels, they never drop or add rows
@@ -2080,6 +2204,7 @@ def test_fillna_dataset_misaligned_matches_reference(spark):
 # idx/arg skipna=False (np.argmax first-NaN-wins) + fill_value
 
 
+@needs_xr
 def test_isin_nan_matches_reference(sds, series):
     """np.isin: NaN never matches (IEEE NaN != NaN), missing is False."""
     got = _ours(sds.isin([series[0], np.nan])).astype(float)
@@ -2087,6 +2212,7 @@ def test_isin_nan_matches_reference(sds, series):
     np.testing.assert_array_equal(got, exp)
 
 
+@needs_xr
 def test_clip_array_bounds_match_reference(spark, series):
     """clip bounds may be arrays (common.py:462 broadcasts them)."""
     lo = np.linspace(-1, 0, N)
@@ -2102,6 +2228,7 @@ def test_clip_array_bounds_match_reference(spark, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_diff_label_lower_matches_reference(sds, series):
     got = _ours(sds.diff("t", label="lower"))
     exp = _ref(series).diff("t", label="lower").values
@@ -2111,6 +2238,7 @@ def test_diff_label_lower_matches_reference(sds, series):
     np.testing.assert_allclose(got2, exp2, equal_nan=True)
 
 
+@needs_xr
 def test_groupby_nan_key_dropped_matches_reference(spark, series):
     """NaN group labels form no group (factorize drops NaN)."""
     gn = np.arange(N) % 3.0
@@ -2139,6 +2267,7 @@ def test_groupby_shift_matches_pandas(spark, sds, series):
         np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_concat_fill_value_matches_reference(spark):
     from xarray_spark.combine import concat
     a = xr.Dataset({"x": ("t", [1.0, 2.0]), "y": ("t", [5.0, 6.0])},
@@ -2155,6 +2284,7 @@ def test_concat_fill_value_matches_reference(spark):
     np.testing.assert_allclose(gp["x"].to_numpy(), exp["x"].values)
 
 
+@needs_xr
 def test_resample_empty_bins_match_reference(spark):
     """resample materializes the FULL first..last bin run; empty bins
     are missing-valued in every reduction, count included
@@ -2174,6 +2304,7 @@ def test_resample_empty_bins_match_reference(spark):
                                    err_msg=f"resample {verb}")
 
 
+@needs_xr
 def test_idx_arg_skipna_false_matches_reference(sds, series):
     """skipna=False is np.argmax/argmin: NaN comparisons are always
     False, so the FIRST NaN wins whenever one exists."""
@@ -2184,6 +2315,7 @@ def test_idx_arg_skipna_false_matches_reference(sds, series):
         assert float(got) == exp, f"{meth}: {got} != {exp}"
 
 
+@needs_xr
 def test_idxmax_fill_value_matches_reference(spark):
     allnan = XDataset(spark.createDataFrame(
         pd.DataFrame({"t": [0, 1], "v": [np.nan, np.nan]})), dims=["t"])
@@ -2193,6 +2325,7 @@ def test_idxmax_fill_value_matches_reference(spark):
     assert float(got) == exp
 
 
+@needs_xr
 def test_argmax_dict_skipna_false_matches_reference(spark):
     g = np.arange(12, dtype=float).reshape(3, 4)
     g[1, 2] = np.nan
@@ -2211,6 +2344,7 @@ def test_argmax_dict_skipna_false_matches_reference(spark):
 # full/cov, coarsen coord_func, unstack fill_value, *_like dtype
 
 
+@needs_xr
 def test_where_3arg_and_array_other_match_reference(spark, sds, series):
     import xarray_spark as xs
     ref = xr.DataArray(series, dims="t", coords={"t": np.arange(N)})
@@ -2227,6 +2361,7 @@ def test_where_3arg_and_array_other_match_reference(spark, sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_nan_comparisons_match_numpy(sds, series):
     """Spark orders NaN as the largest value; numpy comparisons with
     NaN are ALWAYS False. The cmp operators normalize."""
@@ -2240,6 +2375,7 @@ def test_nan_comparisons_match_numpy(sds, series):
         np.testing.assert_array_equal(got, exp)
 
 
+@needs_xr
 def test_polyfit_full_cov_match_reference(spark):
     rng = np.random.RandomState(5)
     n = 25
@@ -2267,6 +2403,7 @@ def test_polyfit_full_cov_match_reference(spark):
             rc["polyfit_covariance"].values, rtol=1e-6)
 
 
+@needs_xr
 def test_coarsen_coord_func_matches_reference(sds, series):
     got = (sds.coarsen(t=5, boundary="trim", coord_func="min").mean()
            .to_pandas().sort_values("t"))
@@ -2277,6 +2414,7 @@ def test_coarsen_coord_func_matches_reference(sds, series):
                                equal_nan=True)
 
 
+@needs_xr
 def test_unstack_fill_value_matches_reference(spark):
     rsrc = (xr.DataArray(np.arange(6, dtype=float), dims="p",
                          coords={"y": ("p", [0, 0, 1, 1, 2, 2]),
@@ -2306,6 +2444,7 @@ def test_like_dtype_matches_reference(spark):
 # groupby by list of names, ddof params
 
 
+@needs_xr
 def test_align_fill_value_matches_reference(spark):
     import xarray_spark as xs
     a = xr.Dataset({"v": ("t", [1.0, 2.0])}, coords={"t": [0, 1]})
@@ -2322,6 +2461,7 @@ def test_align_fill_value_matches_reference(spark):
         gb.to_pandas().sort_values("t")["v"].to_numpy(), eb["v"].values)
 
 
+@needs_xr
 def test_roll_coords_keeps_pairing(sds, series):
     """roll_coords=True rolls index and data together — every value
     keeps its label, which is the identity in label-keyed long form."""
@@ -2333,6 +2473,7 @@ def test_roll_coords_keeps_pairing(sds, series):
     np.testing.assert_allclose(got, epair, equal_nan=True)
 
 
+@needs_xr
 def test_dt_accessor_on_index_matches_reference(spark):
     """da.dt on the time index itself: the result column is suffixed
     (time_) so the dim column survives; values match the reference."""
@@ -2366,6 +2507,7 @@ def test_str_contains_case_matches_pandas(spark):
             assert got == exp, f"case={case} regex={regex}"
 
 
+@needs_xr
 def test_swap_dims_consumes_variable(spark):
     s2 = XDataset(spark.createDataFrame(
         pd.DataFrame({"t": range(4), "u": [10, 20, 30, 40],
@@ -2380,6 +2522,7 @@ def test_swap_dims_consumes_variable(spark):
         float(rsw["v"].mean().values)
 
 
+@needs_xr
 def test_groupby_list_of_names_matches_reference(spark, series):
     g1 = np.arange(N) % 2
     g2 = np.arange(N) % 3
@@ -2394,6 +2537,7 @@ def test_groupby_list_of_names_matches_reference(spark, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_std_var_ddof_match_reference(sds, series):
     ref = _ref(series)
     for meth in ("std", "var"):
@@ -2409,6 +2553,7 @@ def test_std_var_ddof_match_reference(sds, series):
 # interpolate_na fill_value edge constants
 
 
+@needs_xr
 def test_query_nan_semantics_match_reference(spark):
     rng = np.random.RandomState(21)
     n = 30
@@ -2425,6 +2570,7 @@ def test_query_nan_semantics_match_reference(spark):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_isel_bool_mask_matches_reference(sds, series):
     mask = series > 0
     ref = xr.Dataset({"v": ("t", series)}, coords={"t": np.arange(N)})
@@ -2434,6 +2580,7 @@ def test_isel_bool_mask_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_sortby_lexsort_parity_matches_reference(spark):
     u2 = np.array([3.0, 1.0, 2.0, 1.0, 2.0])
     v2 = np.array([9.0, 5.0, np.nan, 6.0, 7.0])
@@ -2448,6 +2595,7 @@ def test_sortby_lexsort_parity_matches_reference(spark):
                                    err_msg=f"ascending={asc}")
 
 
+@needs_xr
 def test_head_tail_int_forms_match_reference(sds, series):
     ref = xr.Dataset({"v": ("t", series)}, coords={"t": np.arange(N)})
     np.testing.assert_allclose(
@@ -2458,6 +2606,7 @@ def test_head_tail_int_forms_match_reference(sds, series):
         ref.head()["v"].values, equal_nan=True)
 
 
+@needs_xr
 def test_interp_na_fill_value_matches_reference(spark):
     rng = np.random.RandomState(4)
     n = 20
@@ -2536,6 +2685,7 @@ def test_new_ufuncs_match_numpy(spark):
 # construct fill_value, weighted quantile with zero weights
 
 
+@needs_xr
 def test_clip_nan_and_min_gt_max_matches_reference(sds, series):
     ref = _ref(series)
     got = _ours(sds.clip(0.5, -0.5))
@@ -2543,6 +2693,7 @@ def test_clip_nan_and_min_gt_max_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_cross_matches_reference(spark):
     import xarray_spark as xs
     c1 = np.array([1.0, 2.0, 3.0])
@@ -2564,6 +2715,7 @@ def test_drop_sel_missing_label_raises(sds):
     assert sds.drop_sel(t=[999], errors="ignore").to_pandas().shape[0] == N
 
 
+@needs_xr
 def test_datetime_difference_matches_reference(spark):
     ts = pd.date_range("2001-01-01", periods=12, freq="7h13min")
     sdt = XDataset(spark.createDataFrame(
@@ -2577,6 +2729,7 @@ def test_datetime_difference_matches_reference(spark):
     np.testing.assert_allclose(gv, exp)
 
 
+@needs_xr
 def test_rolling_construct_fill_value_matches_reference(sds, series):
     got = np.sort(sds.rolling(t=3).construct("w", fill_value=-9.0)
                   .to_pandas()["v"].to_numpy())
@@ -2585,6 +2738,7 @@ def test_rolling_construct_fill_value_matches_reference(sds, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_weighted_quantile_zero_weights_matches_reference(spark, series):
     w0 = np.ones(N)
     w0[:10] = 0.0
@@ -2603,6 +2757,7 @@ def test_weighted_quantile_zero_weights_matches_reference(spark, series):
 # resample.reduce, groupby.quantile list-q
 
 
+@needs_xr
 def test_polyval_array_coeffs_matches_reference(spark):
     import xarray_spark as xs
     coeffs = xr.DataArray([2.0, -1.0, 0.5], dims="degree",
@@ -2640,6 +2795,7 @@ def test_rename_errors_match_reference(sds):
     assert list(sds.rename({"v": "w"}).data_vars) == ["w"]
 
 
+@needs_xr
 def test_idx_reductions_2d_match_reference(spark):
     rng = np.random.RandomState(44)
     g = rng.randn(3, 4).round(6)
@@ -2656,6 +2812,7 @@ def test_idx_reductions_2d_match_reference(spark):
         r2.argmin("y").values)
 
 
+@needs_xr
 def test_resample_reduce_matches_reference(spark, series):
     ts2 = pd.date_range("2001-01-01", periods=N, freq="D")
     srt = XDataset(spark.createDataFrame(
@@ -2667,6 +2824,7 @@ def test_resample_reduce_matches_reference(spark, series):
     np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_groupby_quantile_list_matches_reference(spark, series):
     gk = np.arange(N) % 3
     sg = XDataset(spark.createDataFrame(
@@ -2684,6 +2842,7 @@ def test_groupby_quantile_list_matches_reference(spark, series):
 # wave 27: pandas-cut default label rendering (precision=3 +
 # include_lowest -0.1% edge), merge compat corners, coder matrix 2
 
+@needs_xr
 def test_groupby_bins_default_labels_match_reference(spark):
     """Default bin labels must render exactly as pandas.cut does —
     precision=3 significant rounding and the include_lowest adjusted
@@ -2708,6 +2867,7 @@ def test_groupby_bins_default_labels_match_reference(spark):
         assert got == exp, (kw, got, exp)
 
 
+@needs_xr
 def test_merge_combine_attrs_matches_reference(spark):
     """merge/concat combine_attrs policies (reference merge.py:545
     merge_attrs; default 'override' = FIRST dataset's attrs only)."""
@@ -2734,6 +2894,7 @@ def test_merge_combine_attrs_matches_reference(spark):
     assert got == {"shared": "s", "other": "o"}
 
 
+@needs_xr
 def test_merge_fill_value_and_exact_matches_reference(spark):
     """merge(fill_value=) fills ONLY alignment-introduced slices
     (reference merge.py merge_core -> align fill_value); join='exact'
@@ -2765,6 +2926,7 @@ def test_merge_fill_value_and_exact_matches_reference(spark):
     assert xmerge([s3, s6], join="exact").to_pandas().shape[0] == 1
 
 
+@needs_xr
 def test_cf_decode_matrix2_matches_reference(spark):
     """Wave 27: CF coder matrix round 2 — mask+scale+offset order,
     missing_value, _Unsigned with fill, bool coder, and the full
@@ -2812,6 +2974,7 @@ def test_cf_decode_matrix2_matches_reference(spark):
         np.testing.assert_array_equal(got, exp)
 
 
+@needs_xr
 def test_reindex_sel_nearest_tie_matches_reference(spark):
     """pandas get_indexer(method='nearest') breaks exact-midpoint ties
     toward the HIGHER label (reference sel/reindex route through it);
@@ -2840,6 +3003,7 @@ def test_reindex_sel_nearest_tie_matches_reference(spark):
             ref.sel(x=[0.5], method="nearest")["v"].values.tolist())
 
 
+@needs_xr
 def test_groupby_transform_ops_match_reference(spark):
     """Wave 27: groupby binary-op transforms (anomaly/normalize),
     scalar fillna (group-independent, reference ops delegation), and
@@ -2876,6 +3040,7 @@ def test_groupby_transform_ops_match_reference(spark):
           sds.groupby("g").map(demean))
 
 
+@needs_xr
 def test_differentiate_edge_order2_matches_reference(spark):
     """np.gradient edge_order=2: 3-point one-sided edge stencils on a
     non-uniform grid (reference core/dataset.py:8475 differentiate)."""
@@ -2893,6 +3058,7 @@ def test_differentiate_edge_order2_matches_reference(spark):
         sds.differentiate("x", edge_order=3)
 
 
+@needs_xr
 def test_cumsum_skipna_false_matches_reference(spark):
     """cumsum/cumprod skipna=False: NaN poisons every later prefix
     (np.cumsum semantics; reference _aggregations cumsum skipna)."""
@@ -2908,6 +3074,7 @@ def test_cumsum_skipna_false_matches_reference(spark):
             np.testing.assert_allclose(got, exp, equal_nan=True)
 
 
+@needs_xr
 def test_pad_per_side_constants_and_symmetric_odd(spark):
     """Wave 27: per-side constant_values (np.pad ((before, after),)
     and dict forms) and reflect_type='odd' applied to symmetric too

@@ -147,8 +147,8 @@ def _ref_xr():
     import sys
     if "/root/reference" not in sys.path:
         sys.path.insert(0, "/root/reference")
-    import xarray as xr
-    return xr
+    # the reference package is optional: its comparisons skip without it
+    return pytest.importorskip("xarray")
 
 
 def _grid_ds(spark, a):

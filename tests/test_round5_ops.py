@@ -27,7 +27,7 @@ def gq_ds(spark):
 def test_grouped_hist_quantile_matches_numpy(gq_ds, method):
     ds, pdf = gq_ds
     qs = [0.1, 0.5, 0.9]
-    with set_options(grouped_quantile_buffer_limit=10):
+    with set_options(grouped_quantile_plan="hist"):
         got = (ds.quantile(qs, dim="i", method=method).to_pandas()
                .sort_values(["g", "quantile"]))
     for g, grp in pdf.groupby("g"):
@@ -40,10 +40,10 @@ def test_grouped_hist_quantile_matches_numpy(gq_ds, method):
 
 def test_grouped_hist_quantile_matches_buffer_path(gq_ds):
     ds, _ = gq_ds
-    with set_options(grouped_quantile_buffer_limit=10):
+    with set_options(grouped_quantile_plan="hist"):
         hist = (ds.quantile([0.25, 0.75], dim="i").to_pandas()
                 .sort_values(["g", "quantile"])["v"].to_numpy())
-    with set_options(grouped_quantile_buffer_limit=None):
+    with set_options(grouped_quantile_plan="buffer"):
         buf = (ds.quantile([0.25, 0.75], dim="i").to_pandas()
                .sort_values(["g", "quantile"])["v"].to_numpy())
     np.testing.assert_allclose(hist, buf, rtol=1e-9, atol=1e-12)
@@ -61,7 +61,7 @@ def test_grouped_hist_quantile_edge_groups(spark):
     rows.append(("infs", 51, float("inf")))
     pdf = spark.createDataFrame(rows, "g string, i long, v double")
     ds = XDataset(pdf, dims=["g", "i"])
-    with set_options(grouped_quantile_buffer_limit=1):
+    with set_options(grouped_quantile_plan="hist"):
         out = ds.quantile([0.0, 0.5, 1.0], dim="i").to_pandas()
     o = {(r["g"], r["quantile"]): r["v"] for _, r in out.iterrows()}
     assert all(np.isnan(o[("nulls", q)]) for q in (0.0, 0.5, 1.0))
@@ -78,7 +78,7 @@ def test_groupby_quantile_and_median_hist(spark):
         "t": np.arange(600), "k": np.arange(600) % 3,
         "v": rng.randn(600).round(6)})
     ds = XDataset(spark.createDataFrame(pdf), dims=["t"])
-    with set_options(grouped_quantile_buffer_limit=10):
+    with set_options(grouped_quantile_plan="hist"):
         got_q = ds.groupby("k").quantile(0.3).to_pandas().sort_values("k")
         got_m = ds.groupby("k").median().to_pandas().sort_values("k")
     for k, grp in pdf.groupby("k"):
@@ -98,8 +98,8 @@ def test_groupby_quantile_list_and_methods(spark):
         "t": np.arange(900), "k": np.arange(900) % 3,
         "v": rng.randn(900).round(6)})
     ds = XDataset(spark.createDataFrame(pdf), dims=["t"])
-    for limit in (None, 10):
-        with set_options(grouped_quantile_buffer_limit=limit):
+    for plan in ("buffer", "hist"):
+        with set_options(grouped_quantile_plan=plan):
             out = (ds.groupby("k").quantile([0.25, 0.75]).to_pandas()
                    .sort_values(["k", "quantile"]))
             lo = (ds.groupby("k").quantile(0.25, method="lower")
@@ -109,7 +109,7 @@ def test_groupby_quantile_list_and_methods(spark):
             exp = np.quantile(vals, [0.25, 0.75])
             sub = out[out["k"] == k].sort_values("quantile")["v"].to_numpy()
             np.testing.assert_allclose(sub, exp, rtol=1e-9,
-                                       err_msg=f"limit={limit} k={k}")
+                                       err_msg=f"plan={plan} k={k}")
             exp_lo = np.quantile(vals, 0.25, method="lower")
             np.testing.assert_allclose(
                 lo[lo["k"] == k]["v"].iloc[0], exp_lo, rtol=1e-12)
@@ -343,7 +343,7 @@ def test_datatree_navigation_and_passthrough(spark):
     # reference structure agreement
     import sys
     sys.path.insert(0, "/root/reference")
-    import xarray as xr
+    xr = pytest.importorskip("xarray")  # the reference package is optional
     ref = xr.DataTree.from_dict({
         p: xr.Dataset({"v": ("t", np.arange(4.0))})
         for p in ("/", "/a", "/a/b", "/c")})

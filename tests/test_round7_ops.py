@@ -18,9 +18,16 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, "/root/reference")
-import xarray as xr  # noqa: E402
+try:
+    import xarray as xr  # noqa: E402
+except ImportError:  # the reference package is optional
+    xr = None
 
 from xarray_spark import XDataArray, XDataset  # noqa: E402
+
+#: tests that compare against the reference xarray package
+needs_xr = pytest.mark.skipif(xr is None,
+                              reason="reference xarray not importable")
 
 
 def _vals(xds):
@@ -43,6 +50,7 @@ def pair_nan(spark):
     return XDataset(dict(data)), xr.Dataset(dict(data))
 
 
+@needs_xr
 class TestBroadcastVarFullReduce:
     """dim=None reductions on dict-constructor broadcast vars."""
 
@@ -123,6 +131,7 @@ class TestBroadcastVarFullReduce:
                 assert bool(a[v][0]) == bool(b[v].values), (fn, v)
 
 
+@needs_xr
 class TestVarDimsSurvivesRenames:
     """ADVICE medium: var_dims remapped through renaming ops."""
 
@@ -214,6 +223,7 @@ class TestDataArrayCoordValidation:
         with pytest.raises(ValueError, match="not a subset"):
             XDataArray(np.zeros((2, 3)), coords={"x": [1, 2]})
 
+    @needs_xr
     def test_reference_raises_same_cases(self):
         for coords in ({"x": [1, 2, 9], "y": [1, 2, 3]}, {"x": [1, 2]}):
             with pytest.raises(Exception):
@@ -238,6 +248,7 @@ class TestQuantileVirtualPosition:
                     got = _virtual_position(method, q, n)
                     assert abs(want - got) < 1e-9, (method, n, q)
 
+    @needs_xr
     def test_averaged_inverted_cdf_q0_grouped(self, spark):
         # the grouped Column path had the same q=0 bug: numpy returns
         # x[0], the split branch returned a 0.5 blend of x[0],x[1]
@@ -251,6 +262,7 @@ class TestQuantileVirtualPosition:
             ref["v"].values.tolist())
 
 
+@needs_xr
 class TestGroupbyBroadcastVars:
     """Wave-40 groupby find: groupby reductions must apply the same
     own-dims discipline as Dataset reductions to dict-constructor
@@ -289,6 +301,7 @@ class TestGroupbyBroadcastVars:
             np.asarray(b["u"].values, dtype=float).ravel().tolist())
 
 
+@needs_xr
 class TestAlongDimOpsBroadcastPassthrough:
     """Round-7 find: along-dim operators (rolling/cum*/shift/diff/
     integrate/differentiate/coarsen) must leave a dict-constructor

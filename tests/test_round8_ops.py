@@ -339,15 +339,9 @@ def test_midbin_equals_hist_plan(spark, method):
     from xarray_spark.options import set_options
     _, ds = _adversarial_grouped(spark)
     qs = [0.0, 0.25, 0.5, 0.9, 1.0]
-    with set_options(grouped_quantile_buffer_limit=10,
-                     grouped_quantile_midbin_limit=10**9,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=1):
+    with set_options(grouped_quantile_plan="midbin"):
         a = ds.quantile(qs, dim="t", method=method).to_pandas()
-    with set_options(grouped_quantile_buffer_limit=10,
-                     grouped_quantile_midbin_limit=None,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=1):
+    with set_options(grouped_quantile_plan="hist"):
         b = ds.quantile(qs, dim="t", method=method).to_pandas()
     a = a.sort_values(["x", "quantile"]).reset_index(drop=True)
     b = b.sort_values(["x", "quantile"]).reset_index(drop=True)
@@ -363,10 +357,7 @@ def test_midbin_matches_numpy_on_finite_groups(spark):
     from xarray_spark.options import set_options
     pdf, ds = _adversarial_grouped(spark)
     qs = [0.1, 0.5, 0.9]
-    with set_options(grouped_quantile_buffer_limit=10,
-                     grouped_quantile_midbin_limit=10**9,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=1):
+    with set_options(grouped_quantile_plan="midbin"):
         got = ds.quantile(qs, dim="t").to_pandas()
     for xg in range(5):  # the finite groups
         vals = pdf[pdf["x"] == xg]["v"].dropna().to_numpy()
@@ -391,10 +382,7 @@ def test_midbin_null_group_labels_and_gate_fallback(spark):
     exp = {0: 2.0, None: 20.0, 1: 6.0}
 
     def run():
-        with set_options(grouped_quantile_buffer_limit=2,
-                         grouped_quantile_midbin_limit=10**6,
-                         grouped_quantile_midbin_threshold=1,
-                         grouped_quantile_midbin_total_floor=1):
+        with set_options(grouped_quantile_plan="midbin"):
             out = ds.quantile([0.5], dim="t").to_pandas()
         return {(None if pd.isna(r["x"]) else int(r["x"])): r["v"]
                 for _, r in out.iterrows()}
@@ -421,53 +409,46 @@ def test_midbin_timestamp_and_string_keys(spark):
         "v": [float(i) for i in range(12)],
     })
     ds = XDataset(spark.createDataFrame(pdf), dims=["ts", "s", "t"])
-    with set_options(grouped_quantile_buffer_limit=2,
-                     grouped_quantile_midbin_limit=10**6,
-                     grouped_quantile_midbin_threshold=1,
-                     grouped_quantile_midbin_total_floor=1):
+    with set_options(grouped_quantile_plan="midbin"):
         out = (ds.quantile([0.5], dim="t").to_pandas()
                .sort_values(["ts", "s"]))
     assert out["v"].tolist() == \
         pdf.groupby(["ts", "s"])["v"].median().tolist()
 
 
-def test_grouped_quantile_plan_picker(spark):
+def test_grouped_quantile_plan_picker(spark, monkeypatch):
     from xarray_spark import dataset as D
     from xarray_spark.options import set_options
     pdf = pd.DataFrame({"k": [0, 0, 0, 1, 1, 1],
                         "v": [1.0, 2.0, 3.0, 4.0, 5.0, 6.0]})
     df = spark.createDataFrame(pdf)
-    # the two-factor guard: memory cap (buffer_limit), perf crossover
-    # (midbin_threshold) and the small-total fixed-cost floor
-    # (midbin_total_floor)
-    tiny = dict(grouped_quantile_midbin_threshold=1,
-                grouped_quantile_midbin_total_floor=1)
-    with set_options(grouped_quantile_buffer_limit=None):
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "buffer"
-    with set_options(grouped_quantile_buffer_limit=1):
-        # buffering banned outright pins the HISTOGRAM plan (q115)
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "hist"
-    with set_options(grouped_quantile_buffer_limit=2,
-                     grouped_quantile_midbin_limit=10**6, **tiny):
-        plan, probe = D._grouped_quantile_plan(df, ["k"], "v")
-        assert plan == "midbin" and probe is not None
-    with set_options(grouped_quantile_buffer_limit=2,
-                     grouped_quantile_midbin_limit=None, **tiny):
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "hist"
-    with set_options(grouped_quantile_buffer_limit=100):
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "buffer"
+
+    def auto(buffer, thresh, floor, mid):
+        monkeypatch.setattr(D, "_QUANTILE_BUFFER_LIMIT", buffer)
+        monkeypatch.setattr(D, "_MIDBIN_THRESHOLD", thresh)
+        monkeypatch.setattr(D, "_MIDBIN_TOTAL_FLOOR", floor)
+        monkeypatch.setattr(D, "_MIDBIN_LIMIT", mid)
+        return D._grouped_quantile_plan(df, ["k"], "v")
+
+    # a forced plan inspects no data and hands no probe
+    for plan in ("buffer", "midbin", "hist"):
+        with set_options(grouped_quantile_plan=plan):
+            assert D._grouped_quantile_plan(df, ["k"], "v") == (plan, None)
+    with pytest.raises(ValueError, match="grouped_quantile_plan"):
+        set_options(grouped_quantile_plan="fastest")
+    # 'auto' at the shipped thresholds buffers a 6-row table for free
+    assert D._grouped_quantile_plan(df, ["k"], "v") == ("buffer", None)
+    # the two-factor guard: memory cap (buffer), perf crossover
+    # (thresh) and the small-total fixed-cost floor (floor); groups of
+    # 3 rows in a 6-row table
+    plan, probe = auto(buffer=2, thresh=1, floor=1, mid=10**6)
+    assert plan == "midbin" and probe is not None
+    assert auto(buffer=2, thresh=1, floor=1, mid=2)[0] == "hist"
     # groups over the PERF threshold but under the memory cap buffer
     # only while the total stays under the floor
-    with set_options(grouped_quantile_buffer_limit=100,
-                     grouped_quantile_midbin_threshold=2,
-                     grouped_quantile_midbin_total_floor=100,
-                     grouped_quantile_midbin_limit=10**6):
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "buffer"
-    with set_options(grouped_quantile_buffer_limit=100,
-                     grouped_quantile_midbin_threshold=2,
-                     grouped_quantile_midbin_total_floor=1,
-                     grouped_quantile_midbin_limit=10**6):
-        assert D._grouped_quantile_plan(df, ["k"], "v")[0] == "midbin"
+    assert auto(buffer=100, thresh=2, floor=100, mid=10**6)[0] == "buffer"
+    assert auto(buffer=100, thresh=2, floor=1, mid=10**6)[0] == "midbin"
+    assert auto(buffer=2, thresh=3, floor=1, mid=10**6)[0] == "buffer"
 
 
 def test_midbin_bucket_monotone_and_deterministic(spark):

@@ -47,16 +47,9 @@ def _expected_groups():
     }
 
 
-# plan forcing via options: buffer (default small-data), hist
-# (buffer_limit=1 bans buffering), midbin (threshold/floor floored so
-# the probe runs, mid_limit catches)
-_PLAN_OPTS = {
-    "buffer": dict(),
-    "hist": dict(grouped_quantile_buffer_limit=1),
-    "midbin": dict(grouped_quantile_buffer_limit=2,
-                   grouped_quantile_midbin_threshold=1,
-                   grouped_quantile_midbin_total_floor=0),
-}
+# plan forcing via the grouped_quantile_plan option
+_PLAN_OPTS = {plan: dict(grouped_quantile_plan=plan)
+              for plan in ("buffer", "hist", "midbin")}
 
 
 @pytest.mark.parametrize("plan", ["buffer", "hist", "midbin"])
@@ -265,23 +258,56 @@ def test_polyfit_weight_length_mismatch_raises(spark):
     np.testing.assert_allclose(cc, [1.0, 2.0], atol=1e-9)
 
 
-def test_grouped_quantile_plan_none_options(spark):
-    """ADVICE r9 #3: None for midbin threshold/floor options must not
-    TypeError in the picker."""
-    pdf = pd.DataFrame({"t": range(12), "k": [i % 2 for i in range(12)],
-                        "v": [float(i) for i in range(12)]})
-    ds = XDataset(spark.createDataFrame(pdf), dims=["t"],
-                  coords={"k": ("t",)})
-    for opts in (dict(grouped_quantile_midbin_threshold=None),
-                 dict(grouped_quantile_midbin_total_floor=None),
-                 dict(grouped_quantile_midbin_threshold=None,
-                      grouped_quantile_midbin_total_floor=None),
-                 dict(grouped_quantile_midbin_threshold=None,
-                      grouped_quantile_midbin_total_floor=0,
-                      grouped_quantile_buffer_limit=3)):
-        with set_options(**opts):
-            got = (ds.groupby("k").quantile(0.5).to_pandas()
-                   .sort_values("k")["v"].to_numpy())
-        exp = np.array([np.quantile(np.arange(0, 12, 2.0), 0.5),
-                        np.quantile(np.arange(1, 12, 2.0), 0.5)])
-        assert got.tolist() == exp.tolist(), opts
+@pytest.mark.parametrize("plan", ["auto", "buffer", "midbin", "hist"])
+def test_groupby_quantile_broadcast_var_every_plan(spark, plan):
+    """GroupBy.quantile runs through Dataset.quantile, so a
+    dict-constructor broadcast var (``u`` lacks ``y``) is quantiled
+    over its de-duplicated x-values on every plan — its ``y`` copies
+    would shift a rank statistic.  The full-dims var ``w`` matches
+    numpy over all its values."""
+    rng = np.random.RandomState(7)
+    nx, ny, nz = 10, 3, 2
+    x = np.arange(nx)
+    u = rng.randint(0, 100, (nx, nz)).astype(float)
+    w = rng.randn(nx, ny, nz)
+    ds = XDataset({"u": (("x", "z"), u), "w": (("x", "y", "z"), w)},
+                  coords={"x": x, "y": np.arange(ny), "z": np.arange(nz),
+                          "g": (("x", "y"),
+                                np.repeat((x % 2)[:, None], ny, 1))})
+    qs = [0.1, 0.25, 0.9]
+    with set_options(grouped_quantile_plan=plan):
+        out = ds.groupby("g").quantile(qs)
+        got = out.to_pandas().sort_values(["g", "z", "quantile"])
+    assert list(out.dims) == ["quantile", "g", "z"]
+    for (g, z), sub in got.groupby(["g", "z"]):
+        exp_u = np.quantile(u[x % 2 == g, z], qs)
+        # the duplicated copies give a different answer, so the dedup
+        # is what this pins
+        assert not np.allclose(np.quantile(np.repeat(u[x % 2 == g, z], ny),
+                                           qs), exp_u)
+        np.testing.assert_allclose(sub["u"].to_numpy(), exp_u,
+                                   rtol=0, atol=0, err_msg=f"{plan} g={g}")
+        np.testing.assert_allclose(sub["w"].to_numpy(),
+                                   np.quantile(w[x % 2 == g, :, z], qs),
+                                   rtol=1e-12, err_msg=f"{plan} g={g}")
+
+
+@pytest.mark.parametrize("plan", ["buffer", "midbin", "hist"])
+def test_resample_quantile_keeps_empty_bins_every_plan(spark, plan):
+    """resample().median()/quantile() materialize the full bin run like
+    the other resample reductions: an empty month is a NaN row (one
+    per quantile), whichever grouped plan computes the bins."""
+    t = pd.to_datetime(["2020-01-05", "2020-01-20", "2020-01-25",
+                        "2020-03-02", "2020-03-09"])
+    vals = [3.0, 1.0, 2.0, 10.0, 20.0]
+    ds = XDataset(spark.createDataFrame(pd.DataFrame({"t": t, "v": vals})),
+                  dims=["t"])
+    with set_options(grouped_quantile_plan=plan):
+        med = ds.resample(t="MS").median().to_pandas().sort_values("t")
+        qs = (ds.resample(t="MS").quantile([0.25, 0.75]).to_pandas()
+              .sort_values(["t", "quantile"]))
+    np.testing.assert_array_equal(med["v"].to_numpy(),
+                                  [2.0, np.nan, 15.0])
+    np.testing.assert_array_equal(
+        qs["v"].to_numpy(),
+        [1.5, 2.5, np.nan, np.nan, 12.5, 17.5])

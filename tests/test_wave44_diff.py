@@ -13,7 +13,7 @@ import numpy as np
 import pytest
 
 sys.path.insert(0, "/root/reference")
-import xarray as xr  # noqa: E402
+xr = pytest.importorskip("xarray")
 
 from xarray_spark import XDataset  # noqa: E402
 

@@ -291,53 +291,43 @@ def _grouped_quantile_plan(df: DataFrame, keys: list,
     never holds a group anywhere, the 100 TB fallback; also the right
     plan when a whole group may hide inside one 1/16-octave bucket).
 
-    Returns ``(plan, probe_hist)``.  Free when plan statistics bound
-    the WHOLE table under the buffer limit (no group can exceed it);
-    otherwise ONE scan finds the max group size — and when
-    ``probe_var`` is given, that scan IS the 1/16-octave bucket table of
-    that var (eagerly materialized): if the verdict is ``'midbin'``,
-    the caller hands it straight to :func:`_grouped_quantile_midbin`
-    as its stage 1, so the plan decision costs no extra pass.
+    Returns ``(plan, probe_hist)``.  ``OPTIONS['grouped_quantile_plan']``
+    other than ``'auto'`` forces that plan with no data inspection.
+    ``'auto'`` is free when plan statistics bound the WHOLE table under
+    the buffer regime (no group can leave it); otherwise ONE scan finds
+    the max group size — and when ``probe_var`` is given, that scan IS
+    the 1/16-octave bucket table of that var (eagerly materialized): if
+    the verdict is ``'midbin'``, the caller hands it straight to
+    :func:`_grouped_quantile_midbin` as its stage 1, so the plan
+    decision costs no extra pass.
 
     Buffer vs bucket-plan choice is TWO-FACTOR (round-8 measured
-    crossover, see options.py): a group over the memory cap never
-    buffers; a group over the ~1e5-row perf threshold buffers only
-    when the whole table sits under the total floor where the bucket
-    plans' fixed job costs dominate.  All three plans are exact —
-    this only picks one.
+    crossover, see :data:`_MIDBIN_THRESHOLD`): a group over the memory
+    cap never buffers; a group over the ~1e5-row perf threshold
+    buffers only when the whole table sits under the total floor where
+    the bucket plans' fixed job costs dominate.  All three plans are
+    exact — this only picks one.
     """
     from xarray_spark.options import OPTIONS
     from xarray_spark._utils import estimated_rows
-    limit = OPTIONS.get("grouped_quantile_buffer_limit")
-    if limit is None:
-        return "buffer", None
-    if limit < 2:
-        # buffering is banned outright (test hook pinning the
-        # histogram plan) — no data inspection needed
-        return "hist", None
+    forced = OPTIONS["grouped_quantile_plan"]
+    if forced != "auto":
+        return forced, None
     est = estimated_rows(df)
-    # None semantics (consistent in the early exit AND pick()):
-    # thresh=None disables the small-group perf shortcut (acts as 0);
-    # floor=None disables the fixed-cost floor (never blocks buffering)
-    thresh = OPTIONS.get("grouped_quantile_midbin_threshold")
-    floor = OPTIONS.get("grouped_quantile_midbin_total_floor")
-    if ((thresh is not None and est <= thresh)
-            or (est <= limit and (floor is None or est <= floor))):
+    if est <= _MIDBIN_THRESHOLD or (est <= _QUANTILE_BUFFER_LIMIT
+                                    and est <= _MIDBIN_TOTAL_FLOOR):
         # no group can exceed the perf threshold, or the whole table
         # is memory-safe AND under the fixed-cost floor — buffer, free
         return "buffer", None
-    mid_limit = OPTIONS.get("grouped_quantile_midbin_limit")
 
     def pick(m):
-        if thresh is not None and m <= thresh:
+        if m <= _MIDBIN_THRESHOLD:
             return "buffer"
-        if (floor is None or est <= floor) and m <= limit:
+        if est <= _MIDBIN_TOTAL_FLOOR and m <= _QUANTILE_BUFFER_LIMIT:
             return "buffer"
-        if mid_limit is not None and m <= mid_limit:
-            return "midbin"
-        return "hist"
+        return "midbin" if m <= _MIDBIN_LIMIT else "hist"
 
-    if probe_var is not None and mid_limit is not None:
+    if probe_var is not None:
         hist = (_midbin_hist(df, keys, probe_var)
                 .localCheckpoint(eager=True))
         hist_rows = _midbin_collect(hist, keys)
@@ -389,11 +379,15 @@ def _midbin_bucket(vv: Column) -> Column:
     int cast: no ANSI-checked integer arithmetic per row."""
     inf = F.lit(float("inf"))
     mag = F.floor(F.log2(F.abs(vv)) * 16) + F.lit(_MIDBIN_OFFSET)
-    return (F.when(vv.isNull() | F.isnan(vv), F.lit(_MIDBIN_NULL))
-            .when(vv == 0, F.lit(0))
-            .when(vv == inf, F.lit(1 << 30))
-            .when(vv == -inf, F.lit(-(1 << 30)))
-            .otherwise(F.signum(vv) * mag)).cast("int")
+    bid = (F.when(vv.isNull() | F.isnan(vv), F.lit(_MIDBIN_NULL))
+           .when(vv == 0, F.lit(0))
+           .when(vv == inf, F.lit(1 << 30))
+           .when(vv == -inf, F.lit(-(1 << 30)))
+           .otherwise(F.signum(vv) * mag)).cast("int")
+    # never null (every branch is), but log2 makes the CASE nullable to
+    # Catalyst, which would infer an isnotnull(__b) join filter that
+    # evaluates the CASE a second time on the candidate scan
+    return F.coalesce(bid, F.lit(_MIDBIN_NULL))
 
 
 def _midbin_rows(df: DataFrame, keys: list, v: str) -> DataFrame:
@@ -434,6 +428,27 @@ def _midbin_candidates(df: DataFrame, keys: list, v: str,
 #: the fully-distributed tail runs instead
 _MIDBIN_HIST_COLLECT_LIMIT = 200_000
 _MIDBIN_CAND_COLLECT_LIMIT = 4_000_000
+
+# Plan-picker thresholds of the 'auto' grouped_quantile_plan.
+#: MEMORY cap: max rows any single group may buffer in one SQL
+#: collect_list aggregation.  A group above it never enters one
+#: aggregation buffer.
+_QUANTILE_BUFFER_LIMIT = 4_000_000
+#: PERF crossover (round-8 measurement, 90M rows cached, min-of-2):
+#: per-group 3k -> buffer 7.2 s vs midbin 18.8 s; 30k -> 11.8 vs 17.1;
+#: 300k -> 21.4 vs 6.1; 3M -> 61.3 vs 3.6.  Buffering wins below ~1e5
+#: rows per group at large totals; the bucket plans win above.  Groups
+#: bigger than this threshold prefer midbin/hist even when they would
+#: FIT the memory cap — unless the whole table is under
+#: :data:`_MIDBIN_TOTAL_FLOOR`, where the bucket plans' fixed job costs
+#: dominate and buffering stays fastest.
+_MIDBIN_THRESHOLD = 131_072
+_MIDBIN_TOTAL_FLOOR = 16_000_000
+#: the midbin plan's worst case (a whole group inside ONE bucket) sorts
+#: the group in a single task, so this cap bounds that task's sort (64M
+#: doubles ≈ 512 MB, spill-backed); above it the 4-pass equi-width
+#: histogram splits tight clusters by value range instead
+_MIDBIN_LIMIT = 64_000_000
 
 
 def _midbin_collect(hist: DataFrame, keys: list):
@@ -607,9 +622,9 @@ def _grouped_quantile_midbin(df: DataFrame, keys: list, v: str, qs: list,
        ~n/buckets-sized slice per group, never an aggregation buffer.
 
     Worst case (a whole group inside one 1/16-octave bucket) sorts the
-    group in one task, which is why the plan is gated by
-    ``grouped_quantile_midbin_limit``; beyond it the equi-width
-    histogram plan splits tight clusters by value range instead.
+    group in one task, which is why the 'auto' pick is gated by
+    :data:`_MIDBIN_LIMIT`; beyond it the equi-width histogram plan
+    splits tight clusters by value range instead.
 
     Returns long form: ``keys… , quantile, v`` (all-null groups kept,
     value null — same contract as the histogram plan).
@@ -2740,12 +2755,17 @@ class XDataset:
           to the ≤2 positions each quantile needs, combine.  Never buffers
           the column in one aggregation buffer, so it survives a 100 TB
           ungrouped quantile where SQL ``percentile`` OOMs one task.
-        - **grouped**: sorted-array order statistics for EVERY method
-          incl. linear (exact, buffers one GROUP's values — fine when
-          groups ≪ executor memory; SQL ``percentile`` is off this
-          path since round 9: its internal lerp is the naive
+        - **grouped**: one of three exact plans, picked by
+          :func:`_grouped_quantile_plan` under
+          ``OPTIONS['grouped_quantile_plan']`` (``'auto'`` by
+          default): sorted-array order statistics for
+          EVERY method incl. linear (buffers one GROUP's values — fine
+          when groups ≪ executor memory; SQL ``percentile`` is off
+          this path since round 9: its internal lerp is the naive
           one-sided form that diverges from numpy under catastrophic
-          cancellation).
+          cancellation), the two-scan midbin selection, or the
+          per-group histogram selection.  GroupBy.quantile/median
+          run through here too, with the group keys as leading dims.
         - ``approx=True``: ``approx_percentile`` t-digest, any shape —
           the opt-in sketch when groups themselves are huge.
         """

@@ -477,106 +477,44 @@ class XGroupBy:
         A scalar ``q`` keeps the reference's scalar shape (no quantile
         dim); a list adds a ``quantile`` dim like Dataset.quantile.
         ``skipna=False`` poisons any group containing NaN (numpy
-        semantics) via a group-count-sized flag join.
+        semantics).
         """
-        from xarray_spark.dataset import _validate_q
-        _validate_q(q if isinstance(q, (list, tuple)) else [q])
-        if not skipna:
-            out = self.quantile(q, method=method)
-            flags = self._agg(
-                lambda v: F.max((F.col(v).isNull()
-                                 | F.isnan(F.col(v).cast("double")))
-                                .cast("int")), True)
-            varlist = list(flags.data_vars)
-            fdf = flags.df
-            for v in varlist:
-                fdf = fdf.withColumnRenamed(v, f"__nan_{v}")
-            join_cols = [c for c in fdf.columns if not c.startswith("__nan_")]
-            df = out.df.join(F.broadcast(fdf), on=join_cols)
-            for v in varlist:
-                if v in out.df.columns:
-                    df = df.withColumn(v, F.when(
-                        F.col(f"__nan_{v}") == 1, F.lit(float("nan"))
-                    ).otherwise(F.col(v)))
-            return out._replace(df=df.drop(*[f"__nan_{v}" for v in varlist]))
-        if isinstance(q, (list, tuple)):
-            return self._quantile_exact([float(x) for x in q], method,
-                                        scalar=False)
-        return self._quantile_exact([float(q)], method, scalar=True)
+        scalar = not isinstance(q, (list, tuple))
+        return self._quantile_exact([q] if scalar else list(q), method,
+                                    skipna, scalar)
 
     def _quantile_exact(self, qs: list, method: str = "linear",
+                        skipna: bool = True,
                         scalar: bool = True) -> XDataset:
-        """Exact per-group quantiles.  Small groups: one-shuffle
-        sorted-array order-statistic aggregate (buffers one group —
-        fine under the buffer limit; NOT SQL ``percentile``, whose
-        internal lerp is the naive one-sided form).  Any group above
-        ``OPTIONS['grouped_quantile_buffer_limit']``: the distributed
-        per-group histogram selection (dataset._grouped_quantile_hist)
-        — exact, no group ever buffered, so a 10^9-row group cannot
-        OOM an executor."""
-        from xarray_spark.dataset import (
-            _grouped_quantile_hist, _grouped_quantile_midbin,
-            _grouped_quantile_plan, _quantile_positions)
-        prepped = self._prepared()
-        kept = self._kept_dims
-        coords = self.ds._coords_on(kept)
+        """Dataset.quantile applied per group (reference
+        core/groupby.py:1285): the group keys become leading
+        ``__key_<k>`` dims of a keyed view, and Dataset.quantile
+        reduces the consumed dims — so the plan pick, the broadcast-var
+        dedup and the NaN poisoning are its own."""
+        keyed = {f"__key_{n}": n for n in self._key_names}
         varlist = [v for v in self.ds.data_vars
                    if _numeric(self.ds, v) and v not in self._key_names]
-        group_cols = [f"__key_{n}" for n in self._key_names] + kept + list(coords)
-        plan, probe = _grouped_quantile_plan(
-            prepped.df, group_cols,
-            probe_var=varlist[0] if varlist else None)
-        if plan != "buffer":
-            from functools import reduce as _reduce_fn
-            from xarray_spark._utils import null_safe_join
-            if plan == "midbin":
-                parts = [_grouped_quantile_midbin(
-                    prepped.df, group_cols, v, qs, method,
-                    probe=probe if i == 0 else None)
-                    for i, v in enumerate(varlist)]
-            else:
-                parts = [_grouped_quantile_hist(prepped.df, group_cols,
-                                                v, qs, method)
-                         for v in varlist]
-            out = _reduce_fn(
-                lambda a, b: null_safe_join(a, b,
-                                            group_cols + ["quantile"]),
-                parts)
-            if scalar:
-                out = out.drop("quantile")
-            for n in self._key_names:
-                out = out.withColumnRenamed(f"__key_{n}", n)
-            dims = ([] if scalar else ["quantile"]) + self._key_names + kept
-            return XDataset(out, dims, coords, varlist, self.ds.attrs)
-        from xarray_spark.dataset import _arr_quantile_expr
-        if scalar and method == "linear":
-            qf = qs[0]
-            # NOT SQL `percentile`: its internal interpolation is the
-            # naive one-sided lerp (diverges from numpy under
-            # catastrophic cancellation — round-8 falsifier)
-            return self._agg(lambda v: _arr_quantile_expr(
-                F.collect_list(F.col(v).cast("double")), qf), True)
-        # buffer path, every method incl. linear: per-group sorted-array
-        # order statistics (same construction as Dataset.quantile),
-        # interpolated by the shared two-sided lerp
-        def agg_for(v):
-            arr = F.sort_array(F.collect_list(F.col(v).cast("double")))
-            return F.array(*[_arr_quantile_expr(arr, x, method,
-                                                presorted=True)
-                             for x in qs])
-        agged = self._agg(agg_for, True)
-        if scalar:
-            return agged._replace(df=agged.df.select(
-                *[c for c in agged.df.columns if c not in varlist],
-                *[F.col(v)[0].alias(v) for v in varlist]))
-        qvals = F.array(*[F.lit(float(x)) for x in qs])
-        df = agged.df.withColumn("__q", F.arrays_zip(
-            qvals.alias("q"), *[F.col(v).alias(v) for v in varlist]))
-        keys = [c for c in agged.df.columns if c not in varlist]
-        df = df.select(*keys, F.explode("__q").alias("__qs")).select(
-            *keys, F.col("__qs.q").alias("quantile"),
-            *[F.col(f"__qs.{v}").alias(v) for v in varlist])
-        return agged._replace(df=df, dims=["quantile"] + list(agged.dims))
+        prepped = self._prepared()
+        # a plain XDataset whatever ds is: grouped results are datasets
+        view = XDataset(prepped.df, list(keyed) + list(self.ds.dims),
+                        prepped.coords, varlist, prepped.attrs)
+        view.var_dims = {v: tuple(keyed) + tuple(own)
+                         for v, own in prepped.var_dims.items()
+                         if v in varlist}
+        out = view.quantile(qs, dim=[d for d in self.ds.dims
+                                     if d in self._consumed],
+                            method=method, skipna=skipna)
+        drop = {"quantile"} if scalar else set()
+        dims = [keyed.get(d, d) for d in out.dims if d not in drop]
+        vd = {}
+        for v, own in out.var_dims.items():
+            own = tuple(keyed.get(d, d) for d in own if d not in drop)
+            if set(own) != set(dims):
+                vd[v] = own
+        df = out.df.drop(*drop)
+        for k, n in keyed.items():
+            df = df.withColumnRenamed(k, n)
+        return out._replace(df=df, dims=dims, var_dims=vd)
 
     def map(self, func, schema=None) -> XDataset:
         """Split-apply-combine UDTF (xarray/core/groupby.py:1614) →

@@ -12,6 +12,14 @@ set_options context manager).
   (2M rows ≈ the point where a one-task global window becomes the job's
   straggler); set to None to always use the global window.
 - ``keep_attrs``: whether attrs survive operators (catalog-side).
+- ``grouped_quantile_plan``: the exact grouped quantile/median plan
+  (Dataset.quantile over some dims, GroupBy.quantile/median).
+  ``'auto'`` (default) picks by group size against the round-8
+  measured crossovers (``dataset._grouped_quantile_plan``); ``'buffer'``
+  (one sorted collect_list aggregate per group), ``'midbin'`` (two-scan
+  1/16-octave bucket selection) or ``'hist'`` (4-pass equi-width
+  histogram selection, never buffers a group) force one.  All three
+  plans are exact — the choice is cost, not result.
 """
 
 from __future__ import annotations
@@ -20,35 +28,7 @@ OPTIONS: dict = {
     "arithmetic_join": "inner",
     "auto_segment_threshold": 2_000_000,
     "keep_attrs": True,
-    # Grouped EXACT quantile/median: max rows any single group may
-    # buffer in one SQL percentile/collect_list aggregation before the
-    # plan switches to the distributed per-group histogram selection
-    # (no buffering, ~4 scans).  The check is free (plan statistics)
-    # when the whole table fits; above that one count job decides.
-    # None = always buffer (pre-r5 behavior).  This is the MEMORY cap:
-    # a group above it never enters one SQL aggregation buffer.
-    "grouped_quantile_buffer_limit": 4_000_000,
-    # PERF crossover (round-8 measurement, 90M rows cached, min-of-2):
-    # per-group 3k -> buffer 7.2 s vs midbin 18.8 s; 30k -> 11.8 vs
-    # 17.1; 300k -> 21.4 vs 6.1; 3M -> 61.3 vs 3.6.  Buffering wins
-    # below ~1e5 rows per group at large totals; the bucket plans win
-    # above.  Groups bigger than this threshold prefer midbin/hist
-    # even when they would FIT the memory cap — unless the whole
-    # table is under the total floor below, where the bucket plans'
-    # fixed job costs dominate and buffering stays fastest.
-    "grouped_quantile_midbin_threshold": 131_072,
-    "grouped_quantile_midbin_total_floor": 16_000_000,
-    # Rolling var/std plan picker: window widths AT or ABOVE this use
-    # the Arrow-batched numpy kernel (applyInPandas over complement-dim
-    # groups / halo segments — vectorized O(n·w), matches numpy's
-    # windowed nanvar exactly); below it the in-plan collect_list +
-    # F.aggregate form runs.  Measured round 10 (SCALE.md): there is
-    # NO crossover — the interpreted per-element lambda loses at every
-    # width (10M rows: w=3 12.4 s vs 1.9 s, w=20 38.9 vs 2.0, w=1000
-    # ~1900 (extrapolated) vs 14.6), so the kernel is the default for
-    # every real window.  None = always HOF (kept as the in-plan
-    # fallback: streaming frames, centered global series).
-    "rolling_var_arrow_threshold": 2,
+    "grouped_quantile_plan": "auto",
     # MEMORY guard on the grouped Arrow rolling kernel (round-10
     # ADVICE #2): applyInPandas materializes each complement-dim group
     # as ONE pandas frame, so a long rolled dim with few groups could
@@ -62,18 +42,11 @@ OPTIONS: dict = {
     # only pathological one-group skew goes over per task).  None =
     # never fall back.
     "rolling_arrow_est_rows_bound": 64_000_000,
-    # Middle plan between the buffered aggregate and the histogram:
-    # two-scan fixed-bucket (1/16-octave) selection — no stats pass,
-    # no aggregation buffer.  The worst case (a whole group inside ONE
-    # bucket) sorts the group in a single task, so this cap bounds
-    # that task's sort (64M doubles ≈ 512 MB, spill-backed); above it
-    # the 4-pass equi-width histogram splits tight clusters by value
-    # range instead.  None = never take the midbin plan.
-    "grouped_quantile_midbin_limit": 64_000_000,
 }
 
 _VALID = {
     "arithmetic_join": {"inner", "outer", "left", "right"},
+    "grouped_quantile_plan": {"auto", "buffer", "midbin", "hist"},
 }
 
 

@@ -253,6 +253,11 @@ class XResample(XGroupBy):
                            funcname=funcname, ddof=ddof, _pre=_pre)
         return self._densify_bins(out)
 
+    def _quantile_exact(self, qs, method="linear", skipna=True,
+                        scalar=True) -> XDataset:
+        return self._densify_bins(
+            super()._quantile_exact(qs, method, skipna, scalar))
+
     def _label_run(self, bounds: DataFrame) -> DataFrame:
         """1-row __lo/__hi label bounds → one-column df of the FULL
         label run (the reference grouper's ``full_index``).

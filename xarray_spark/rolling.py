@@ -331,8 +331,8 @@ class XRolling:
         attribute, not a re-evaluated aggregate (round-4 CSE lesson).
         Cost is O(n·w); Spark evaluates higher-order-function lambdas
         INTERPRETED per element (round-4 lesson), so wide windows
-        dispatch to the Arrow-batched numpy kernel instead
-        (rolling_var_arrow_threshold — crossover measured round 10).
+        dispatch to the Arrow-batched numpy kernel instead (no
+        crossover: the kernel wins at every width, measured round 10).
         inf propagates numpy's way (inf mean → inf−inf=NaN → NaN
         window)."""
         if len(self.windows) > 1:
@@ -377,19 +377,18 @@ class XRolling:
 
     def _arrow_ok(self) -> bool:
         """Picker for the Arrow window kernels: 1-D, real window width
-        at/above the option threshold.  Centered windows over a GLOBAL
-        series stay in-plan — the segmented halo only replicates
-        PRECEDING rows, a centered frame needs trailing context too.
+        (≥ 2; round 10 measured no width where the in-plan form wins).
+        Centered windows over a GLOBAL series stay in-plan — the
+        segmented halo only replicates PRECEDING rows, a centered frame
+        needs trailing context too.
         GROUPED tables estimated above rolling_arrow_est_rows_bound
         stay in-plan too (round-10 ADVICE #2): applyInPandas holds each
         complement-dim group as one pandas frame, and a few huge groups
         would OOM where the in-plan window streams; the no-complement
         shape is halo-segmented and exempt."""
         from xarray_spark.options import OPTIONS
-        thr = OPTIONS["rolling_var_arrow_threshold"]
         has_others = any(d != self.dim for d in self.ds.dims)
-        if thr is None or len(self.windows) != 1 or self.window == -1 \
-                or self.window < thr \
+        if len(self.windows) != 1 or self.window < 2 \
                 or (self._center_of(self.dim) and not has_others):
             return False
         bound = OPTIONS["rolling_arrow_est_rows_bound"]
