@@ -152,3 +152,59 @@ def test_local_df_without_arrow_uses_bounded_parallelize(spark):
             spark.conf.unset(key)
         else:
             spark.conf.set(key, old)
+
+
+def _null_label_frame(spark):
+    """2 x 4 (x, t) frame; coord ``lab`` on x is NULL for x=0, coord
+    ``g`` on t splits t into two groups, and x=1's g=1 population holds
+    a NaN."""
+    rows = [(x, t, None if x == 0 else "b", t % 2,
+             float("nan") if (x, t) == (1, 3) else float(10 * x + t))
+            for x in range(2) for t in range(4)]
+    df = spark.createDataFrame(
+        rows, "x long, t long, lab string, g long, v double")
+    return XDataset(df, dims=["x", "t"], coords={"lab": ("x",), "g": ("t",)})
+
+
+def test_quantile_skipna_false_keeps_null_labelled_population(spark):
+    """The NaN-flag join of quantile(skipna=False) is null-safe: the
+    population whose kept label is NULL keeps its row."""
+    ds = _null_label_frame(spark)
+    want = {r["x"] for r in ds.quantile(0.5, dim="t").df.collect()}
+    got = {r["x"]: r for r in ds.quantile(0.5, dim="t", skipna=False).df.collect()}
+    assert set(got) == want == {0, 1}
+    assert got[0]["lab"] is None and got[0]["v"] == 1.5
+    assert got[1]["v"] is None or got[1]["v"] != got[1]["v"]  # NaN-poisoned
+
+
+def test_groupby_quantile_skipna_false_keeps_null_kept_label(spark):
+    ds = _null_label_frame(spark)
+    out = {(r["x"], r["g"]): r["v"] for r in
+           ds.groupby("g").quantile(0.5, skipna=False).df.collect()}
+    assert set(out) == {(0, 0), (0, 1), (1, 0), (1, 1)}
+    assert out[(0, 0)] == 1.0 and out[(0, 1)] == 2.0 and out[(1, 0)] == 11.0
+    assert out[(1, 1)] is None or out[(1, 1)] != out[(1, 1)]
+
+
+def test_local_df_nested_timestamp_matches_list_path(spark):
+    """A naive datetime inside a struct field gets the list path's
+    driver-local reading too (only top-level fields are localized on
+    the Arrow path, so such schemas take the list path)."""
+    import datetime as dt
+    import time as _time
+    from xarray_spark._utils import local_df
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    _time.tzset()
+    try:
+        rows = [(1, (dt.datetime(2024, 1, 1, 0, 0), 2.0)),
+                (2, (dt.datetime(2024, 6, 15, 12, 0), None))]
+        schema = "k long, s struct<ts: timestamp, w: double>"
+        want = sorted(tuple(r) for r in spark.createDataFrame(rows, schema).collect())
+        assert sorted(tuple(r) for r in local_df(spark, rows, schema).collect()) == want
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        _time.tzset()

@@ -518,3 +518,26 @@ def test_nd_rolling_plan_shape(spark, entry):
     assert plan.count("FlatMapGroupsInPandas") == 1
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def _python_nodes(df) -> int:
+    """Arrow/pandas Python nodes in the executed plan."""
+    heads = [ln.lstrip(" :+-").split(" ", 1)[0].split("(", 1)[0]
+             for ln in plan_of(df).splitlines()]
+    return sum(1 for h in heads
+               if "Python" in h or "InPandas" in h or "InArrow" in h)
+
+
+def test_q94_decode_and_features_plan_one_python_node(spark, entry):
+    """q94's decode_audio → audio_features fuse into ONE Python map
+    over a one-slice literal table: each Python node runs one task per
+    slice, and a task has a fixed cost whatever its row count."""
+    df = entry.q94_audio_features(spark, SF)
+    assert _python_nodes(df) == 1
+    assert df.rdd.getNumPartitions() == 1
+
+
+def test_q36_multimodal_plans_at_most_two_python_nodes(spark, entry):
+    """q36: decode_image → resize_image fuse; extract_features sits on
+    the other side of the join, so 2 nodes (3 unfused)."""
+    assert _python_nodes(entry.q36_multimodal_features(spark, SF)) <= 2

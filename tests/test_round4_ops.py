@@ -218,6 +218,23 @@ def test_complex_ufuncs(spark):
     assert out["isc"].tolist() == [False, True, True, True]
 
 
+def test_complex_add_sub(spark):
+    pdf = pd.DataFrame({"re": [1.0, 0.0, -1.5], "im": [0.0, 2.0, -1.0]})
+    df = spark.createDataFrame(pdf).withColumn(
+        "z", xu.complex_col(F.col("re"), F.col("im"))).withColumn(
+        "w", xu.complex_col(F.col("im"), F.lit(0.25)))
+    out = df.select(
+        xu.real(xu.cadd(F.col("z"), F.col("w"))).alias("ar"),
+        xu.imag(xu.cadd(F.col("z"), F.col("w"))).alias("ai"),
+        xu.real(xu.csub(F.col("z"), F.col("w"))).alias("sr"),
+        xu.imag(xu.csub(F.col("z"), F.col("w"))).alias("si"),
+    ).toPandas()
+    z = pdf["re"].to_numpy() + 1j * pdf["im"].to_numpy()
+    w = pdf["im"].to_numpy() + 0.25j
+    np.testing.assert_array_equal(out["ar"] + 1j * out["ai"], z + w)
+    np.testing.assert_array_equal(out["sr"] + 1j * out["si"], z - w)
+
+
 def test_build_complex(spark):
     pdf = pd.DataFrame({"t": [0, 1], "re": [1.0, 2.0], "im": [3.0, 4.0]})
     ds = XDataset(spark.createDataFrame(pdf), dims=["t"])

@@ -297,6 +297,33 @@ def test_multimodal_decode_resize_pipeline(spark):
         np.testing.assert_allclose(same[k], orig[k], rtol=1e-6)
 
 
+def test_fake_codec_closed_form_lcg_matches_loop():
+    """The codec stand-ins run their LCG in closed form; the per-step
+    loop is the reference, bit for bit (uint64 wraps in both)."""
+    import numpy as np
+    from xarray_spark.extras.multimodal import _fake_decode, _fake_pixels
+
+    def fnv(data, limit):
+        h = 1469598103934665603
+        for by in data[:limit]:
+            h = ((h ^ by) * 1099511628211) % (1 << 64)
+        return h
+
+    def loop(state, n, shift):
+        out = []
+        for _ in range(n):
+            state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
+            out.append((state >> 40) / float(1 << shift))
+        return np.array(out)
+
+    for data in (b"", b"\x00", bytes(range(256)) * 5):
+        feat = (loop(fnv(data, 4096), 8, 23) - 1.0).astype("float32")
+        np.testing.assert_array_equal(_fake_decode(data), feat)
+        px = loop(fnv(data, 1024) | 1, 2 * 3 * 3, 24).astype("float32")
+        np.testing.assert_array_equal(_fake_pixels(data, 2, 3), px)
+    assert len(_fake_pixels(b"ab", 0, 4)) == 0
+
+
 def test_multimodal_frame_sample(spark):
     from xarray_spark.extras.multimodal import frame_sample, synth_media_table
     media = synth_media_table(spark, n=4)

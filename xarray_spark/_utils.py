@@ -192,21 +192,23 @@ def materialize_if_derived(df):
 
 
 def local_df(spark, rows, schema):
-    """Literal (driver-side) rows → DataFrame without per-slice Python
-    worker handshakes.
+    """Literal (driver-side) rows → DataFrame in one slice per Arrow
+    batch, read by the JVM with no Python worker.
 
-    ``spark.createDataFrame(list)`` parallelizes the pickled rows into
-    ``defaultParallelism`` slices, and EVERY downstream task that reads
-    a slice pays a Python-worker round-trip (~50-100 ms); a coalesce
-    over it serializes those round-trips (measured: a 32-row literal
-    table + coalesce(2) = 2.5 s at local[32] vs 0.09 s via Arrow).
-    The Arrow local path converts the rows driver-side into Arrow
-    batches the JVM reads directly — no Python workers at all — and is
-    core-count-independent.  Rows that Arrow cannot represent, and
-    every row when the session disables Arrow, fall back to an
-    explicit FEW-slice parallelize (still bounded handshakes).  Value
-    semantics are pinned by tests + the oracle: object-dtype pandas
-    keeps None as null (never NaN-ified).
+    ``spark.createDataFrame(list)`` pickles the rows into
+    ``defaultParallelism`` slices, and every task reading a slice pays
+    a Python-worker round trip (32 rows + coalesce(2): 2.5 s at
+    local[32] vs 0.09 s here).  The Arrow local path converts the rows
+    driver-side into batches; rows Arrow cannot represent, and every
+    row when the session disables Arrow, fall back to a few-slice
+    parallelize.  Object-dtype pandas keeps None as null.
+
+    ``ceil(n / arrow.maxRecordsPerBatch)`` slices make a label-sized
+    table ONE slice, so a Python map over it runs one task: each task
+    costs ~0.25 CPU-s fixed on CPython 3.11, whatever its rows (57 % in
+    the worker's ``importlib.invalidate_caches()``, which re-reads
+    pyspark.zip per cached zipimporter; identity mapInPandas over 32
+    rows, 4 vCPU).
     """
     rows = list(rows)
     if not rows:
@@ -239,7 +241,11 @@ def local_df(spark, rows, schema):
         # regression test).  Localizing naive values to the driver tz
         # BEFORE conversion reproduces the list semantics exactly.
         # TIMESTAMP_NTZ is wall-clock in both paths — left untouched.
+        # Nested timestamps take the list path itself (_fallback()'s RDD
+        # path converts in the Python workers, in THEIR local tz).
         if struct is not None:
+            if any(_nested_timestamp(f.dataType) for f in struct.fields):
+                return spark.createDataFrame(rows, schema)
             cols = list(struct.fieldNames())
             ltz = [isinstance(f.dataType, T.TimestampType)
                    for f in struct.fields]
@@ -262,16 +268,61 @@ def local_df(spark, rows, schema):
             rows = [tuple(_conv(x, f) for x, f in zip(r, ltz))
                     for r in rows]
         pdf = pd.DataFrame(rows, columns=cols, dtype=object)
-        # the Arrow path still slices into defaultParallelism one-row
-        # batches; downstream Python stages (mapInPandas chains) would
-        # pay one worker crossing PER SLICE.  Coalescing ARROW slices
-        # is a JVM-side read (unlike the pickle path, where coalesce
-        # serializes worker handshakes — never coalesce that one):
-        # measured 0.73 -> 0.27 s on the q94 decode+features chain.
-        parts = max(1, min(4, (len(rows) + 15) // 16))
+        # Arrow slices come in defaultParallelism; coalescing them is a
+        # JVM-side read (never coalesce the pickle path's slices)
+        step = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+        parts = -(-len(rows) // step) if step > 0 else 1
         return spark.createDataFrame(pdf, schema=schema).coalesce(parts)
     except Exception:
         return _fallback()
+
+
+def _nested_timestamp(dtype: T.DataType) -> bool:
+    """A TimestampType inside a struct, array or map type."""
+    if isinstance(dtype, T.ArrayType):
+        kids = [dtype.elementType]
+    elif isinstance(dtype, T.MapType):
+        kids = [dtype.keyType, dtype.valueType]
+    elif isinstance(dtype, T.StructType):
+        kids = [f.dataType for f in dtype.fields]
+    else:
+        return False
+    return any(isinstance(k, T.TimestampType) or _nested_timestamp(k)
+               for k in kids)
+
+
+def arrow_map(df, fn, schema: T.StructType):
+    """``df.mapInArrow(fn, schema)`` that fuses with the map below it.
+
+    ``fn`` maps an iterator of ``pyarrow.RecordBatch`` to an iterator
+    of batches; every batch it yields is cast to ``schema``'s Arrow
+    type, so a stage sees the same column types whether its input came
+    fused or through the JVM.  When ``df`` is the direct, untransformed
+    output of another ``arrow_map``, the two functions are composed
+    over that map's input and plan as ONE Python node: every Python
+    node costs one worker task per input slice, and each task carries
+    a fixed ~0.25 CPU-s (see ``local_df``).  Anything in between — a
+    select, filter, join or cache — breaks the fusion, which is
+    correct: the later stage must see that operator's output.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    target = to_arrow_schema(schema)
+
+    def stage(batches):
+        for b in fn(batches):
+            yield b if b.schema.equals(target) else b.cast(target)
+
+    below = vars(df).get("_xs_arrow_map")
+    if below is not None and not df.is_cached:
+        src, inner = below
+
+        def run(batches):
+            return stage(inner(batches))
+    else:
+        src, run = df, stage
+    out = src.mapInArrow(run, schema)
+    out._xs_arrow_map = (src, run)
+    return out
 
 
 def parse_iso8601_prefix(s: str):

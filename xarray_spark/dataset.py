@@ -2792,8 +2792,9 @@ class XDataset:
             flag_aggs = [F.max(nan_(v)).alias(f"__nan_{v}") for v in varlist]
             flags = (self.df.groupBy(*keys).agg(*flag_aggs)
                      if keys else self.df.agg(*flag_aggs))
-            fdf = F.broadcast(flags)
-            df = out.df.join(fdf, on=keys) if keys else out.df.crossJoin(fdf)
+            # null-safe: a population whose kept label is NULL keeps its row
+            from xarray_spark._utils import null_safe_join
+            df = null_safe_join(out.df, F.broadcast(flags), keys)
             for v in varlist:
                 df = df.withColumn(v, F.when(
                     F.col(f"__nan_{v}") == 1, F.lit(float("nan"))

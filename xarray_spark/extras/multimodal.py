@@ -3,19 +3,24 @@ with typed metadata.
 
 The decode kernels need codec libraries (PIL/ffmpeg/torchaudio) that are
 NOT in this container — they are stubbed behind deterministic fakes /
-NotImplementedError.  Everything Spark-side is real and tested: schemas,
-partition-aware batching, mapInPandas signatures, and the
-feature-extraction pipeline shape.
+NotImplementedError.  The Spark side is real and tested: every map runs
+through ``_utils.arrow_map``, so adjacent maps (decode → features,
+decode → resize) plan as ONE Python node.  That sets the cost at
+label-sized inputs: each Python task costs a fixed ~0.25 CPU-s on
+CPython 3.11 whatever its rows (identity ``mapInPandas`` over 32 rows:
+0.44-0.56 worker CPU-s, two chained: 0.86-0.98, 4 vCPU).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from xarray_spark._utils import arrow_map, local_df
 
 IMAGE_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -32,43 +37,72 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def _fake_decode(data: bytes) -> list[float]:
+def _binary_rows(col: pa.Array) -> list[np.ndarray]:
+    """Per-row uint8 arrays of a binary Arrow column (null → empty)."""
+    return [np.frombuffer(x or b"", np.uint8) for x in col.to_pylist()]
+
+
+def _list_rows(col: pa.Array) -> list[np.ndarray]:
+    """Per-row numpy views of a list Arrow column (null row → empty)."""
+    o, vals = col.offsets.to_numpy(), col.values.to_numpy(zero_copy_only=False)
+    return [vals[a:b] for a, b in zip(o[:-1], o[1:])]
+
+
+def _cat(parts: list, dtype) -> np.ndarray:
+    return np.concatenate(parts).astype(dtype, copy=False) if parts else np.empty(0, dtype)
+
+
+def _list_array(parts: list, dtype, mask=None) -> pa.ListArray:
+    """List column from per-row numpy arrays: one concatenate."""
+    offs = np.cumsum([0] + [len(p) for p in parts], dtype=np.int32)
+    return pa.ListArray.from_arrays(offs, pa.array(_cat(parts, dtype)), mask=mask)
+
+
+def _batch(schema: T.StructType, cols: list) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(cols, names=schema.fieldNames())
+
+
+def _fnv(data, limit: int) -> int:
+    h = 1469598103934665603
+    for by in bytes(data[:limit]):
+        h = ((h ^ by) * 1099511628211) % (1 << 64)
+    return h
+
+
+def _lcg(seed: int, n: int) -> np.ndarray:
+    """Top 24 bits of ``n`` LCG steps from ``seed``, in closed form: step
+    i is ``a^i·s + c·(1 + a + … + a^(i-1))`` in wrapping uint64."""
+    a, c = np.uint64(6364136223846793005), np.uint64(1442695040888963407)
+    with np.errstate(over="ignore"):  # uint64 LCG wraps by design
+        pw = np.cumprod(np.full(n, a, np.uint64))
+        geo = np.cumsum(np.concatenate([np.ones(min(n, 1), np.uint64), pw[:-1]]))
+        return ((pw * np.uint64(seed) + c * geo) >> np.uint64(40)).astype("float64")
+
+
+def _fake_decode(data) -> np.ndarray:
     """Deterministic stand-in for a real image decode + embed: hashes the
     bytes into a fixed-length pseudo-feature.  REPLACE with a real codec
     (PIL + model) when the runtime has one."""
-    h = 1469598103934665603
-    for by in data[:4096]:
-        h = ((h ^ by) * 1099511628211) % (1 << 64)
-    out = []
-    state = h
-    for _ in range(8):
-        state = (state * 6364136223846793005 + 1442695040888963407) % (1 << 64)
-        out.append(((state >> 40) / float(1 << 23)) - 1.0)
-    return out
+    return (_lcg(_fnv(data, 4096), 8) / float(1 << 23) - 1.0).astype("float32")
 
 
 def extract_features(df: DataFrame, data_col: str = "data", id_col: str = "media_id",
                      batch_size: int = 256) -> DataFrame:
-    """Arrow-batched feature extraction over binary media columns.
+    """Arrow-batched feature extraction over binary media columns (a
+    null payload gives a null feature and ``n_bytes`` 0).  At scale,
+    repartition first so batches are size-bounded by
+    spark.sql.execution.arrow.maxRecordsPerBatch."""
 
-    mapInPandas so each Python worker sees whole record batches (no
-    per-row serde); at scale, repartition first so batches are
-    size-bounded by spark.sql.execution.arrow.maxRecordsPerBatch.
-    """
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            col = b.column(data_col)
+            rows = _binary_rows(col)
+            feats = [_fake_decode(p) for p in rows]
+            yield _batch(FEATURE_SCHEMA, [
+                b.column(id_col), _list_array(feats, np.float32, mask=col.is_null()),
+                pa.array(np.array([len(p) for p in rows], np.int64))])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                _fake_decode(bytes(x)) if x is not None else None
-                for x in pdf[data_col]
-            ]
-            yield pd.DataFrame({
-                "media_id": pdf[id_col],
-                "feature": feats,
-                "n_bytes": [len(bytes(x)) if x is not None else 0 for x in pdf[data_col]],
-            })
-
-    return df.mapInPandas(run, FEATURE_SCHEMA)
+    return arrow_map(df, run, FEATURE_SCHEMA)
 
 
 DECODED_SCHEMA = T.StructType([
@@ -86,83 +120,65 @@ FRAME_SCHEMA = T.StructType([
 ])
 
 
-def _fake_pixels(data: bytes, width: int, height: int, channels: int = 3):
+def _fake_pixels(data, width: int, height: int, channels: int = 3):
     """Deterministic stand-in for the CODEC KERNEL ONLY (libjpeg/PIL is
     not in this runtime): an LCG seeded by the payload hash emits a
-    plausible float32 pixel buffer.  The mapInPandas plumbing around it
-    is the real pipeline."""
-    import numpy as np
-    h = 1469598103934665603
-    for by in data[:1024]:
-        h = ((h ^ by) * 1099511628211) % (1 << 64)
+    plausible float32 pixel buffer.  The Arrow plumbing around it is the
+    real pipeline."""
     n = width * height * channels
-    out = np.empty(n, dtype="float64")
-    a, c = np.uint64(6364136223846793005), np.uint64(1442695040888963407)
-    with np.errstate(over="ignore"):  # uint64 LCG wraps by design
-        state = np.uint64(h | 1)
-        for i in range(n):
-            state = state * a + c
-            out[i] = float(state >> np.uint64(40)) / float(1 << 24)
-    return out.astype("float32")
+    return (_lcg(_fnv(data, 1024) | 1, n) / float(1 << 24)).astype("float32")
 
 
 def decode_image(df: DataFrame, data_col: str = "data", id_col: str = "media_id",
                  width_col: str = "width", height_col: str = "height") -> DataFrame:
     """Image decode: binary payload → flat float32 pixel buffer
-    (media_id, width, height, channels, pixels).
-
-    The Spark side is real — Arrow record batches through mapInPandas,
-    one output row per image, size-bounded by arrow.maxRecordsPerBatch.
-    The codec kernel uses PIL when the runtime has it and otherwise the
-    clearly-marked deterministic fake (_fake_pixels)."""
+    (media_id, width, height, channels, pixels), one output row per
+    image.  The codec kernel uses PIL when the runtime has it and
+    otherwise the clearly-marked deterministic fake (_fake_pixels)."""
     try:  # pragma: no cover - PIL absent in this runtime
         from PIL import Image  # noqa: F401
         have_pil = True
     except ImportError:
         have_pil = False
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import io as _io
-
-        import numpy as np
-        for pdf in batches:
-            rows = {"media_id": [], "width": [], "height": [],
-                    "channels": [], "pixels": []}
-            for _, r in pdf.iterrows():
-                data = bytes(r[data_col]) if r[data_col] is not None else b""
-                w, h = int(r[width_col]), int(r[height_col])
+        for b in batches:
+            dims, px = [], []
+            for p, w, h in zip(_binary_rows(b.column(data_col)),
+                               b.column(width_col).to_pylist(),
+                               b.column(height_col).to_pylist()):
                 if have_pil:  # pragma: no cover
                     from PIL import Image
-                    img = np.asarray(Image.open(_io.BytesIO(data)).convert("RGB"))
+                    img = np.asarray(Image.open(_io.BytesIO(p.tobytes())).convert("RGB"))
                     h, w, ch = img.shape
-                    px = (img.astype("float32") / 255.0).ravel()
+                    px.append((img.astype("float32") / 255.0).ravel())
                 else:
                     ch = 3
-                    px = _fake_pixels(data, w, h, ch)
-                rows["media_id"].append(r[id_col])
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["channels"].append(ch)
-                rows["pixels"].append(px)
-            yield pd.DataFrame(rows)
+                    px.append(_fake_pixels(p, w, h, ch))
+                dims.append((w, h, ch))
+            w, h, ch = np.array(dims, np.int32).reshape(-1, 3).T
+            yield _batch(DECODED_SCHEMA, [b.column(id_col), pa.array(w), pa.array(h),
+                                          pa.array(ch), _list_array(px, np.float32)])
 
-    return df.mapInPandas(run, DECODED_SCHEMA)
+    return arrow_map(df, run, DECODED_SCHEMA)
 
 
 def resize_image(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Bilinear resize of decoded pixel buffers — REAL numpy math (no
-    codec needed), Arrow-batched: each image's flat buffer reshapes to
-    (h, w, c), samples on the target grid with bilinear weights, and
-    flattens back.  Output schema matches DECODED_SCHEMA with the new
+    codec needed): each image's flat buffer reshapes to (h, w, c),
+    samples on the target grid with bilinear weights, and flattens
+    back.  Output schema matches DECODED_SCHEMA with the new
     dimensions."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
             out_px = []
-            for _, r in pdf.iterrows():
-                w, h, ch = int(r["width"]), int(r["height"]), int(r["channels"])
-                img = np.asarray(r["pixels"], dtype="float32").reshape(h, w, ch)
+            for x, w, h, ch in zip(_list_rows(b.column("pixels")),
+                                   b.column("width").to_pylist(),
+                                   b.column("height").to_pylist(),
+                                   b.column("channels").to_pylist()):
+                img = x.astype("float32").reshape(h, w, ch)
                 ys = np.linspace(0, h - 1, out_h)
                 xs = np.linspace(0, w - 1, out_w)
                 y0 = np.floor(ys).astype(int); y1 = np.minimum(y0 + 1, h - 1)
@@ -171,14 +187,13 @@ def resize_image(decoded: DataFrame, out_w: int, out_h: int) -> DataFrame:
                 top = img[y0][:, x0] * (1 - wx) + img[y0][:, x1] * wx
                 bot = img[y1][:, x0] * (1 - wx) + img[y1][:, x1] * wx
                 out_px.append(((1 - wy) * top + wy * bot).astype("float32").ravel())
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "width": out_w, "height": out_h,
-                "channels": pdf["channels"],
-                "pixels": out_px,
-            })
+            n = b.num_rows
+            yield _batch(DECODED_SCHEMA, [
+                b.column("media_id"), pa.array(np.full(n, out_w, np.int32)),
+                pa.array(np.full(n, out_h, np.int32)), b.column("channels"),
+                _list_array(out_px, np.float32)])
 
-    return decoded.mapInPandas(run, DECODED_SCHEMA)
+    return arrow_map(decoded, run, DECODED_SCHEMA)
 
 
 def frame_sample(df: DataFrame, data_col: str = "data", id_col: str = "media_id",
@@ -188,40 +203,38 @@ def frame_sample(df: DataFrame, data_col: str = "data", id_col: str = "media_id"
 
     The demux kernel is the stub — without ffmpeg the payload is split
     into fixed-size pseudo-frames (``frame_bytes``); with ffmpeg
-    bindings, replace ``_demux``.  The sampling logic (keep every Nth
+    bindings, replace the split.  The sampling logic (keep every Nth
     frame), the row explosion, and the Arrow batch shape are the real
     pipeline and survive a codec swap unchanged."""
 
-    def _demux(data: bytes) -> list[bytes]:
-        # ffmpeg call point — fixed-size split stands in for the demuxer
-        return [data[i:i + frame_bytes]
-                for i in range(0, len(data), frame_bytes)]
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            counts, idxs, lens, vals = [], [], [], []
+            for p in _binary_rows(b.column(data_col)):
+                # ffmpeg call point: fixed-size split stands in for the demuxer
+                starts = np.arange(0, len(p), frame_bytes * every_n)
+                counts.append(len(starts))
+                idxs.append(starts // frame_bytes)
+                lens.append(np.minimum(frame_bytes, len(p) - starts))
+                vals.append(p[(np.arange(len(p)) // frame_bytes) % every_n == 0])
+            idx = _cat(idxs, np.int32)
+            offs = np.cumsum(np.concatenate([[0], _cat(lens, np.int64)]), dtype=np.int32)
+            frames = pa.BinaryArray.from_buffers(
+                pa.binary(), len(idx),
+                [None, pa.py_buffer(offs), pa.py_buffer(_cat(vals, np.uint8))])
+            rows = np.repeat(np.arange(b.num_rows), counts)
+            yield _batch(FRAME_SCHEMA, [b.column(id_col).take(rows), pa.array(idx), frames])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for _, r in pdf.iterrows():
-                data = bytes(r[data_col]) if r[data_col] is not None else b""
-                for i, fr in enumerate(_demux(data)):
-                    if i % every_n == 0:
-                        ids.append(r[id_col]); idxs.append(i); frames.append(fr)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs,
-                                "frame": frames})
+    return arrow_map(df, run, FRAME_SCHEMA)
 
-    return df.mapInPandas(run, FRAME_SCHEMA)
+
+def _synth_payload(i: int) -> bytes:
+    return bytes([(i * 37 + j) % 256 for j in range(128 + (i % 5) * 32)])
 
 
 def synth_media_table(spark, n: int = 64) -> DataFrame:
     """Deterministic fake media table for tests (binary payloads)."""
-    rows = [
-        (i, bytes([(i * 37 + j) % 256 for j in range(128 + (i % 5) * 32)]), "fake", 16, 16)
-        for i in range(n)
-    ]
-    # Arrow local path: the JVM reads the batches directly — the
-    # pickled-slice route cost one Python-worker handshake per
-    # defaultParallelism slice, SERIALIZED by the old coalesce()
-    # (measured 2.5 s at local[32] for 32 rows vs 0.09 s here)
-    from xarray_spark._utils import local_df
+    rows = [(i, _synth_payload(i), "fake", 16, 16) for i in range(n)]
     return local_df(spark, rows, IMAGE_SCHEMA)
 
 
@@ -262,27 +275,20 @@ def decode_audio(df: DataFrame, data_col: str = "data", id_col: str = "media_id"
     cannot supply: they raise NotImplementedError at the decode point;
     the Arrow batching, schema, and downstream feature pipeline are
     format-agnostic and survive a codec swap unchanged."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_id, out_s, out_r = [], [], []
-            for _, r in pdf.iterrows():
-                fmt = r[format_col]
-                if fmt != "pcm16":
-                    raise NotImplementedError(
-                        f"audio codec {fmt!r} needs ffmpeg/torchaudio; "
-                        "only raw pcm16 decodes in this runtime")
-                data = bytes(r[data_col]) if r[data_col] is not None else b""
-                usable = len(data) - (len(data) % 2)
-                x = np.frombuffer(data[:usable], dtype="<i2").astype("float64")
-                out_id.append(r[id_col])
-                out_s.append(x / 32768.0)
-                out_r.append(r[rate_col])
-            yield pd.DataFrame({"media_id": out_id, "samples": out_s,
-                                "sample_rate": out_r})
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            bad = [f for f in b.column(format_col).to_pylist() if f != "pcm16"]
+            if bad:
+                raise NotImplementedError(
+                    f"audio codec {bad[0]!r} needs ffmpeg/torchaudio; "
+                    "only raw pcm16 decodes in this runtime")
+            samples = [p[:len(p) - len(p) % 2].view("<i2").astype("float64") / 32768.0
+                       for p in _binary_rows(b.column(data_col))]
+            yield _batch(DECODED_AUDIO_SCHEMA, [
+                b.column(id_col), _list_array(samples, np.float64), b.column(rate_col)])
 
-    return df.mapInPandas(run, DECODED_AUDIO_SCHEMA)
+    return arrow_map(df, run, DECODED_AUDIO_SCHEMA)
 
 
 def audio_features(decoded: DataFrame, frame_len: int = 32,
@@ -293,39 +299,31 @@ def audio_features(decoded: DataFrame, frame_len: int = 32,
     standard first-pass audio quality/VAD features, all exact numpy.
 
     Scale shape: one Arrow batch in, a frame-exploded batch out — the
-    explosion happens inside the Python worker, so Spark shuffles frame
+    explosion happens inside the Python worker (fused with the decode
+    when it reads ``decode_audio`` directly), so Spark moves frame
     ROWS (3 scalars each), never sample arrays."""
-    import numpy as np
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, rms_o, zcr_o = [], [], [], []
-            for _, r in pdf.iterrows():
-                x = np.asarray(r[samples_col], dtype="float64")
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            counts, rms_o, zcr_o = [], [], []
+            for x in _list_rows(b.column(samples_col)):
                 n_frames = len(x) // frame_len
-                if n_frames == 0:
-                    continue
                 fr = x[: n_frames * frame_len].reshape(n_frames, frame_len)
-                rms = np.sqrt((fr * fr).mean(axis=1))
+                counts.append(n_frames)
+                rms_o.append(np.sqrt((fr * fr).mean(axis=1)))
                 signchg = (fr[:, 1:] * fr[:, :-1]) < 0
-                zcr = signchg.sum(axis=1) / float(frame_len - 1)
-                for k in range(n_frames):
-                    ids.append(r[id_col]); idxs.append(k)
-                    rms_o.append(float(rms[k])); zcr_o.append(float(zcr[k]))
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs,
-                                "rms": rms_o, "zcr": zcr_o})
+                zcr_o.append(signchg.sum(axis=1) / float(frame_len - 1))
+            idx = _cat([np.arange(k) for k in counts], np.int32)
+            yield _batch(AUDIO_FEATURE_SCHEMA, [
+                b.column(id_col).take(np.repeat(np.arange(b.num_rows), counts)), pa.array(idx),
+                pa.array(_cat(rms_o, np.float64)), pa.array(_cat(zcr_o, np.float64))])
 
-    return decoded.mapInPandas(run, AUDIO_FEATURE_SCHEMA)
+    return arrow_map(decoded, run, AUDIO_FEATURE_SCHEMA)
 
 
 def synth_audio_table(spark, n: int = 32) -> DataFrame:
     """Deterministic fake audio table: byte j of media i is
     (i*37 + j) % 256 — closed form, so an external oracle can re-derive
     every PCM sample without touching the blob."""
-    rows = [
-        (i, bytes([(i * 37 + j) % 256 for j in range(128 + (i % 5) * 32)]),
-         "pcm16", 16000)
-        for i in range(n)
-    ]
-    from xarray_spark._utils import local_df
+    rows = [(i, _synth_payload(i), "pcm16", 16000) for i in range(n)]
     return local_df(spark, rows, AUDIO_SCHEMA)

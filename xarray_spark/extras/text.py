@@ -133,19 +133,6 @@ def ngrams(text: Column, n: int = 3) -> Column:
     return F.element_at(F.transform(F.array(toks_expr), build), 1)
 
 
-def annotate(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the standard text-feature columns."""
-    t = F.col(text_col)
-    return (
-        df.withColumn("n_tokens", token_count(t))
-        .withColumn("n_chars_computed", char_count(t))
-        .withColumn("punct_ratio", punct_ratio(t))
-        .withColumn("quality", quality_score(t))
-        .withColumn("lang_guess", language_id(t))
-        .withColumn("fp", fingerprint(t))
-    )
-
-
 # --------------------------------------------------------------------- #
 # safety / PII scanning — regex patterns chosen to behave identically
 # under Java regex (Spark) and RE2 (DuckDB): no lookaround, no

@@ -130,19 +130,6 @@ def stream_ewma(
     )
 
 
-def to_stream_sink(df: DataFrame, path: str, checkpoint: str,
-                   fmt: str = "parquet", mode: str = "append"):
-    """File sink with exactly-once semantics via checkpointing — the
-    streaming analogue of region/append to_zarr writes
-    (xarray/core/dataset.py:2204 append_dim)."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(mode)
-    )
-
-
 def stream_sessionize(
     df: DataFrame,
     time_col: str,
