@@ -8,6 +8,7 @@ later dims, so subsequent conforms must anti-join against the current
 not reclassify a fact scan as derived).
 """
 
+import datetime as dt
 import os
 import sys
 
@@ -203,6 +204,65 @@ def test_local_df_nested_timestamp_matches_list_path(spark):
         want = sorted(tuple(r) for r in spark.createDataFrame(rows, schema).collect())
         assert sorted(tuple(r) for r in local_df(spark, rows, schema).collect()) == want
     finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        _time.tzset()
+
+
+def test_materialize_memo_reads_no_columns(spark, monkeypatch):
+    """The memo read never resolves df.columns (a py4j schema round
+    trip that DataFrame.__getattr__ makes for a missing attribute):
+    0 reads on a miss and on a hit."""
+    df = spark.createDataFrame([(1, 2.0)], "k long, v double")
+    owner = next(c for c in type(df).__mro__ if "columns" in c.__dict__)
+    fget = owner.__dict__["columns"].fget
+    reads = []
+    monkeypatch.setattr(owner, "columns", property(
+        lambda self: reads.append(1) or fget(self)))
+    assert df.columns == ["k", "v"] and len(reads) == 1  # patch is live
+    reads.clear()
+    assert materialize_if_derived(df) is df  # miss: literal, not derived
+    assert reads == []
+    assert materialize_if_derived(df) is df  # hit
+    assert reads == []
+
+
+@pytest.mark.parametrize("schema,rows", [
+    ("k long, ts timestamp",
+     [(1, dt.datetime(2024, 1, 1, 0, 0)), (2, dt.datetime(2024, 6, 15, 12, 0))]),
+    (["k", "ts"],
+     [(1, dt.datetime(2024, 1, 1, 0, 0)), (2, dt.datetime(2024, 6, 15, 12, 0))]),
+    ("k long, s struct<ts: timestamp, w: double>",
+     [(1, (dt.datetime(2024, 1, 1, 0, 0), 2.0)),
+      (2, (dt.datetime(2024, 6, 15, 12, 0), None))]),
+    (["k", "s"],
+     [(1, [dt.datetime(2024, 1, 1, 0, 0)]),
+      (2, [dt.datetime(2024, 6, 15, 12, 0)])]),
+], ids=["top_typed", "top_names", "nested_typed", "nested_names"])
+def test_local_df_without_arrow_naive_timestamps_match_list_path(
+        spark, schema, rows):
+    """With Arrow disabled, rows holding a naive datetime (top-level or
+    nested, typed or names-only schema) take the list path, which reads
+    them in the driver's time zone; the parallelize fallback would read
+    them in the Python workers' zone."""
+    import time as _time
+    from xarray_spark._utils import local_df
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key, None)
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    _time.tzset()
+    spark.conf.set(key, "false")
+    try:
+        want = sorted(tuple(r) for r in spark.createDataFrame(rows, schema).collect())
+        assert sorted(tuple(r) for r in local_df(spark, rows, schema).collect()) == want
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
         if old_tz is None:
             os.environ.pop("TZ", None)
         else:

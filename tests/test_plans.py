@@ -74,12 +74,12 @@ def test_ungrouped_quantile_no_percentile_buffer(spark, entry):
     assert "percentile(" not in plan, "ungrouped quantile must not buffer the column"
 
 
-def test_ffill_auto_segments_above_threshold(spark):
-    from xarray_spark import XDataset
-    from xarray_spark.options import set_options
+def test_ffill_auto_segments_above_threshold(spark, monkeypatch):
+    from xarray_spark import XDataset, options
     rows = [{"t": i, "v": float(i) if i % 5 == 0 else None} for i in range(400)]
     d = XDataset(spark.createDataFrame(rows, "t int, v double"), dims=["t"])
-    with set_options(auto_segment_threshold=1):
+    with monkeypatch.context() as m:
+        m.setattr(options, "AUTO_SEGMENT_THRESHOLD", 1)
         out = d.ffill("t")
         plan = plan_of(out.df)
         assert "__seg" in plan, "global-series ffill should dispatch to the segmented path"
@@ -170,6 +170,22 @@ def test_ewm_pair_join_no_cartesian(spark):
     b = XDataset(spark.createDataFrame(pdf2), dims=["t"])
     plan = plan_of(a.rolling_exp(t=4, window_type="span").cov(b).to_spark())
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+
+
+def test_q50_unkeyed_grouped_map_is_single_partition_exchange(spark, entry):
+    """A grouped map with no complement dim is Spark's keyless
+    groupBy(): one Exchange SinglePartition feeds FlatMapGroupsInPandas,
+    with no constant grouping column, hash exchange or sort on it."""
+    df = entry.q50_rolling_exp(spark, SF)
+    df.collect()  # the executed (final adaptive) plan
+    lines = plan_of(df).splitlines()
+    at = [i for i, ln in enumerate(lines) if "FlatMapGroupsInPandas" in ln]
+    assert at
+    for i in at:
+        below = [ln.strip() for ln in lines[i + 1:i + 3]]
+        assert any(ln.startswith("+- Exchange SinglePartition")
+                   for ln in below), below
+    assert "__g#" not in "\n".join(lines)
 
 
 def test_coarsen_construct_broadcasts_label_blocks(spark, entry):

@@ -237,12 +237,12 @@ def test_nd_rolling_argmin_documented_raise(spark):
 
 # ------------------------------------------------ round-10 ADVICE fixes
 
-def test_rolling_arrow_group_bound_falls_back_in_plan(spark):
+def test_rolling_arrow_group_bound_falls_back_in_plan(spark, monkeypatch):
     """ADVICE #2: a grouped table estimated above
-    rolling_arrow_est_rows_bound keeps rolling var in-plan (streaming
-    window) instead of materializing whole groups in Arrow; values
-    identical either way."""
-    from xarray_spark.options import set_options
+    options.ROLLING_ARROW_EST_ROWS_BOUND keeps rolling var in-plan
+    (streaming window) instead of materializing whole groups in Arrow;
+    values identical either way."""
+    from xarray_spark import options
     pdf = pd.DataFrame({
         "g": ["a"] * 50 + ["b"] * 50,
         "x": list(range(50)) * 2,
@@ -251,7 +251,8 @@ def test_rolling_arrow_group_bound_falls_back_in_plan(spark):
     ds = XDataset(spark.createDataFrame(pdf), dims=["g", "x"],
                   data_vars=["v"])
     r = lambda: ds.rolling(x=5, min_periods=2).var()  # noqa: E731
-    with set_options(rolling_arrow_est_rows_bound=1):
+    with monkeypatch.context() as m:
+        m.setattr(options, "ROLLING_ARROW_EST_ROWS_BOUND", 1)
         guarded = r()
         plan = guarded.to_spark()._jdf.queryExecution().executedPlan().toString()
         assert "FlatMapGroupsInPandas" not in plan  # in-plan HOF form

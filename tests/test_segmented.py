@@ -94,14 +94,15 @@ def test_ewm_segmented_matches_pandas_kernel(spark):
         assert np.allclose(got, exp, rtol=1e-9, atol=1e-9, equal_nan=True), agg
 
 
-def test_ewm_auto_segment_dispatch(spark):
+def test_ewm_auto_segment_dispatch(spark, monkeypatch):
     import numpy as np
     import pandas as pd
-    from xarray_spark import XDataset, set_options
+    from xarray_spark import XDataset, options
     pdf = pd.DataFrame({"t": np.arange(2000, dtype="int64"),
                         "v": np.arange(2000, dtype="float64")})
     ds = XDataset(spark.createDataFrame(pdf), dims=["t"])
-    with set_options(auto_segment_threshold=100):
+    with monkeypatch.context() as m:
+        m.setattr(options, "AUTO_SEGMENT_THRESHOLD", 100)
         out = ds.rolling_exp(t=10).mean().df
         # two-phase plan: no partition-less window, grouped by __seg
         plan = out._jdf.queryExecution().executedPlan().toString()

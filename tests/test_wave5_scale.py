@@ -260,12 +260,13 @@ def test_set_options_arithmetic_join(spark):
         set_options(no_such_option=1)
 
 
-def test_auto_segment_dispatch(spark):
-    from xarray_spark import set_options
+def test_auto_segment_dispatch(spark, monkeypatch):
+    from xarray_spark import options
     rows = [{"t": i, "v": float(i)} for i in range(300)]
     d = XDataset(spark.createDataFrame(rows), dims=["t"])
     plain = [r["v"] for r in d.rolling(t=5).mean().df.orderBy("t").collect()]
-    with set_options(auto_segment_threshold=100):
+    with monkeypatch.context() as m:
+        m.setattr(options, "AUTO_SEGMENT_THRESHOLD", 100)
         auto = d.rolling(t=5).mean()
         vals = [r["v"] for r in auto.df.orderBy("t").collect()]
         cum = [r["v"] for r in d.cumsum("t").df.orderBy("t").collect()]

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import datetime as _dt
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -161,7 +163,9 @@ def materialize_if_derived(df):
     would recompute.  Acceptable for label-table-shaped (reduced)
     data on a single node; clusters wanting resilience should swap
     in reliable ``spark.checkpoint`` via this one call site."""
-    cached = getattr(df, "_xs_materialized", None)
+    # vars(), not getattr: on a miss DataFrame.__getattr__ would look
+    # the name up in df.columns, a py4j schema round trip
+    cached = vars(df).get("_xs_materialized")
     if cached is not None:
         return cached
     try:
@@ -201,7 +205,8 @@ def local_df(spark, rows, schema):
     local[32] vs 0.09 s here).  The Arrow local path converts the rows
     driver-side into batches; rows Arrow cannot represent, and every
     row when the session disables Arrow, fall back to a few-slice
-    parallelize.  Object-dtype pandas keeps None as null.
+    parallelize, or to the list path when they hold a naive datetime.
+    Object-dtype pandas keeps None as null.
 
     ``ceil(n / arrow.maxRecordsPerBatch)`` slices make a label-sized
     table ONE slice, so a Python map over it runs one task: each task
@@ -215,6 +220,11 @@ def local_df(spark, rows, schema):
         return spark.createDataFrame(rows, schema)
 
     def _fallback():
+        if any(_naive_datetime(r) for r in rows):
+            # the list path converts naive datetimes on the driver;
+            # parallelize would convert them in the Python workers, in
+            # THEIR local tz
+            return spark.createDataFrame(rows, schema)
         n = max(1, min(4, (len(rows) + 255) // 256))
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, n), schema)
@@ -225,8 +235,6 @@ def local_df(spark, rows, schema):
         # the coalesce below would serialize their worker handshakes
         return _fallback()
     try:
-        import datetime as _dt
-
         import pandas as pd
         struct = None
         if hasattr(schema, "fields"):
@@ -241,8 +249,7 @@ def local_df(spark, rows, schema):
         # regression test).  Localizing naive values to the driver tz
         # BEFORE conversion reproduces the list semantics exactly.
         # TIMESTAMP_NTZ is wall-clock in both paths — left untouched.
-        # Nested timestamps take the list path itself (_fallback()'s RDD
-        # path converts in the Python workers, in THEIR local tz).
+        # Nested timestamps take the list path itself.
         if struct is not None:
             if any(_nested_timestamp(f.dataType) for f in struct.fields):
                 return spark.createDataFrame(rows, schema)
@@ -275,6 +282,15 @@ def local_df(spark, rows, schema):
         return spark.createDataFrame(pdf, schema=schema).coalesce(parts)
     except Exception:
         return _fallback()
+
+
+def _naive_datetime(x) -> bool:
+    """A naive ``datetime`` at or inside ``x`` (tuple, list or dict)."""
+    if isinstance(x, _dt.datetime):
+        return x.tzinfo is None
+    if isinstance(x, dict):
+        x = [*x.keys(), *x.values()]
+    return isinstance(x, (tuple, list)) and any(map(_naive_datetime, x))
 
 
 def _nested_timestamp(dtype: T.DataType) -> bool:

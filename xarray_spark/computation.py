@@ -401,12 +401,7 @@ def polyfit(ds: XDataset, dim: str, deg: int, w: str | None = None,
                 rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_fields])
 
-    if others:
-        result = moments.groupBy(*others).applyInPandas(lambda pdf: solve(pdf), out_schema)
-    else:
-        result = moments.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: solve(pdf.drop(columns="__g")), out_schema
-        )
+    result = moments.groupBy(*others).applyInPandas(solve, out_schema)
     return XDataset(result, ["degree"] + others, {},
                     [f"{v}_polyfit_coefficients" for v in varlist] + extra_vars,
                     ds.attrs)
@@ -548,12 +543,7 @@ def curvefit(ds: XDataset, coords: str, func: Callable,
             rows.append(row)
         return pd.DataFrame(rows, columns=[f.name for f in out_fields])
 
-    if others:
-        result = base.groupBy(*others).applyInPandas(fit_group, out_schema)
-    else:
-        result = base.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: fit_group(pdf.drop(columns="__g")), out_schema
-        )
+    result = base.groupBy(*others).applyInPandas(fit_group, out_schema)
     return XDataset(result, ["param"] + others, {},
                     [f"{v}_curvefit_coefficients" for v in varlist], ds.attrs)
 
@@ -1158,12 +1148,7 @@ class XWeighted:
                 out[v] = [wq(pdf[v].to_numpy(dtype=float), pdf["__w"].to_numpy(dtype=float))]
             return pd.DataFrame(out)
 
-        if keys:
-            res = df.groupBy(*keys).applyInPandas(apply_fn, schema)
-        else:
-            res = df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-                lambda pdf: apply_fn(pdf.drop(columns="__g")), schema
-            )
+        res = df.groupBy(*keys).applyInPandas(apply_fn, schema)
         return XDataset(res, keep, coords, varlist, ds.attrs)
 
 
@@ -1274,14 +1259,8 @@ def apply_ufunc(
     core = list(input_core_dims[0]) if input_core_dims else []
     broadcast_dims = [d for d in ds.dims if d not in core]
     schema = output_schema or ds.df.schema
-    if broadcast_dims:
-        df = ds.df.repartition(*broadcast_dims).groupBy(*broadcast_dims).applyInPandas(
-            lambda pdf: func(pdf, **kw), schema
-        )
-    else:
-        df = ds.df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: func(pdf.drop(columns="__g"), **kw), schema
-        )
+    df = ds.df.groupBy(*broadcast_dims).applyInPandas(
+        lambda pdf: func(pdf, **kw), schema)
     out_cols = [f.name for f in (schema if isinstance(schema, T.StructType) else df.schema)]
     dims = [d for d in ds.dims if d in out_cols]
     return XDataset(df, dims, {}, None, ds.attrs)

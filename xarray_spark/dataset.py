@@ -3074,15 +3074,15 @@ class XDataset:
 
     def cumsum(self, dim=None, skipna: bool = True,
                keep_attrs: bool | None = None) -> "XDataset":
-        from xarray_spark.options import OPTIONS
+        from xarray_spark import options
         from xarray_spark._utils import estimated_rows
         dims = self._norm_dim_arg(dim)
-        thr = OPTIONS["auto_segment_threshold"]
+        thr = options.AUTO_SEGMENT_THRESHOLD
         if (skipna and thr is not None and len(dims) == 1
                 and not [d for d in self.dims if d != dims[0]]
                 and estimated_rows(self.df) >= thr):
             # single-task global-scan shape and over the threshold →
-            # segmented two-phase scan (options.py auto_segment_threshold)
+            # segmented two-phase scan (options.AUTO_SEGMENT_THRESHOLD)
             from xarray_spark.segmented import cumsum_segmented
             out = cumsum_segmented(self, dims[0])
             return out._replace(attrs=self._resolve_attrs(keep_attrs))
@@ -3351,12 +3351,7 @@ class XDataset:
             import pandas as _pd
             return _pd.DataFrame(res)
 
-        if keys:
-            df = self.df.groupBy(*keys).applyInPandas(apply_fn, out_schema)
-        else:
-            df = self.df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-                lambda pdf: apply_fn(pdf.drop(columns="__g")), out_schema
-            )
+        df = self.df.groupBy(*keys).applyInPandas(apply_fn, out_schema)
         return self._replace(df=df, dims=keep, coords=coords,
                              data_vars=varlist,
                              attrs=self._resolve_attrs(keep_attrs))

@@ -28,11 +28,11 @@ def _ordered_windows(ds: XDataset, dim: str):
 
 def _maybe_segmented_fill(ds: XDataset, dim: str, limit, kind: str):
     """Auto-dispatch global-series ffill/bfill to the segmented scale
-    path (options.py auto_segment_threshold) — lazy size estimate, no
+    path (options.AUTO_SEGMENT_THRESHOLD) — lazy size estimate, no
     count() action."""
-    from xarray_spark.options import OPTIONS
+    from xarray_spark import options
     from xarray_spark._utils import estimated_rows
-    thr = OPTIONS["auto_segment_threshold"]
+    thr = options.AUTO_SEGMENT_THRESHOLD
     if thr is None or limit is not None:
         return None
     if [d for d in ds.dims if d != dim]:
@@ -139,21 +139,26 @@ def interpolate_na(ds: XDataset, dim: str, method: str = "linear",
             "constant — linear/nearest/zero only")
     from xarray_spark._utils import nan_to_null
     ds = ds._replace(df=nan_to_null(ds.df, list(ds.data_vars), ds.df.schema))
+    # xarray max_gap: gaps wider than this (in coordinate units; seconds
+    # for time dims) stay unfilled
+    gap = (None if max_gap is None
+           else float(max_gap.total_seconds())
+           if hasattr(max_gap, "total_seconds") else float(max_gap))
     if method in ("quadratic", "cubic", "polynomial"):
         o = {"quadratic": 2, "cubic": 3}.get(method, order)
         if o is None:
             raise ValueError("method='polynomial' requires order=")
-        return _interpolate_na_poly(ds, dim, int(o), limit, max_gap,
+        return _interpolate_na_poly(ds, dim, int(o), limit, gap,
                                     use_coordinate)
     if method in ("pchip", "akima"):
-        return _interpolate_na_hermite(ds, dim, method, limit, max_gap,
+        return _interpolate_na_hermite(ds, dim, method, limit, gap,
                                        use_coordinate)
     if method in ("spline", "cubic_spline", "natural", "smooth_spline"):
         if method == "smooth_spline" and lam is None and s is None:
             raise ValueError("method='smooth_spline' requires lam= or s=")
         if lam is not None and s is not None:
             raise ValueError("pass lam= or s=, not both")
-        return _interpolate_na_spline(ds, dim, limit, max_gap, use_coordinate,
+        return _interpolate_na_spline(ds, dim, limit, gap, use_coordinate,
                                       lam=lam, s=s)
     if method == "slinear":
         method = "linear"
@@ -236,11 +241,8 @@ def interpolate_na(ds: XDataset, dim: str, method: str = "linear",
                 interp = F.when((x - x0) <= (x1 - x), y0).otherwise(y1)
             interp = F.when(exact_prev, y0).when(exact_next, y1).otherwise(interp)
             two_sided = x0.isNotNull() & x1.isNotNull()
-            if max_gap is not None:
-                # xarray max_gap: leave gaps wider than max_gap (in
-                # coordinate units; seconds for time dims) unfilled —
+            if gap is not None:
                 # a distance-0 exact hit is never a gap
-                gap = float(max_gap.total_seconds()) if hasattr(max_gap, "total_seconds") else float(max_gap)
                 two_sided = two_sided & ((x1 - x0) <= gap)
             can_fill = exact_prev | exact_next | two_sided
             if limit is not None:
@@ -317,26 +319,25 @@ def _hermite_slopes(xv, yv, method: str):
     return d
 
 
-def _interpolate_na_hermite(ds: XDataset, dim: str, method: str,
-                            limit: int | None, max_gap,
-                            use_coordinate: bool = True) -> XDataset:
-    """pchip/akima gap fill: cubic Hermite in the containing interval
-    with family-specific slopes (_hermite_slopes) — numpy per series via
-    applyInPandas, same harness and interior-only/limit/max_gap
-    semantics as the polynomial path (xarray/core/missing.py:486 routes
-    these to scipy; the slope constructions here are the published
-    formulas, no scipy needed)."""
+def _interior_fill(ds: XDataset, dim: str, limit: int | None,
+                   gap: float | None, use_coordinate: bool, min_valid: int,
+                   fit) -> XDataset:
+    """The numpy gap-fill harness of the polynomial, Hermite and spline
+    families: one applyInPandas call per complement-dim group (with no
+    complement dim, the keyless ``groupBy()`` hands the whole series to
+    one call), each var sorted along ``dim``.  A var with fewer than
+    ``min_valid`` valid points stays as it is.  Otherwise
+    ``fit(xv, yv)`` sees its valid points and returns ``at(xi, j)``,
+    the estimate at ``xi`` inside ``[xv[j], xv[j+1]]``; it fills interior
+    nulls only, skipping gaps wider than ``gap`` (coordinate units) and
+    nulls more than ``limit`` positions past the last valid point."""
     import numpy as np
     import pandas as pd
 
     others = [d for d in ds.dims if d != dim]
     varlist = list(ds.data_vars)
-    gap = None
-    if max_gap is not None:
-        gap = float(max_gap.total_seconds()) if hasattr(max_gap, "total_seconds") else float(max_gap)
-    xdtype = ds.df.schema[dim].dataType
-    base = ds.df.withColumn("__x", _as_double(F.col(dim), xdtype))
-    schema = base.drop("__x").schema
+    base = ds.df.withColumn(
+        "__x", _as_double(F.col(dim), ds.df.schema[dim].dataType))
 
     def fill_group(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("__x").reset_index(drop=True)
@@ -346,9 +347,9 @@ def _interpolate_na_hermite(ds: XDataset, dim: str, method: str,
             y = pdf[v].to_numpy("float64")
             valid = ~np.isnan(y)
             xv, yv = x[valid], y[valid]
-            if len(xv) < 2:
+            if len(xv) < min_valid:
                 continue
-            slopes = _hermite_slopes(xv, yv, method)
+            at = fit(xv, yv)
             vidx = np.flatnonzero(valid)
             for i in np.flatnonzero(~valid):
                 pos = np.searchsorted(vidx, i)
@@ -359,84 +360,60 @@ def _interpolate_na_hermite(ds: XDataset, dim: str, method: str,
                     continue
                 if limit is not None and (i - vidx[j]) > limit:
                     continue
-                hh = xv[j + 1] - xv[j]
-                t = (x[i] - xv[j]) / hh
-                h00 = (1 + 2 * t) * (1 - t) ** 2
-                h10 = t * (1 - t) ** 2
-                h01 = t * t * (3 - 2 * t)
-                h11 = t * t * (t - 1)
-                y[i] = (h00 * yv[j] + h10 * hh * slopes[j]
-                        + h01 * yv[j + 1] + h11 * hh * slopes[j + 1])
+                y[i] = at(x[i], j)
             pdf[v] = y
         return pdf.drop(columns="__x")
 
-    if others:
-        out = base.groupBy(*others).applyInPandas(fill_group, schema)
-    else:
-        out = base.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: fill_group(pdf.drop(columns="__g")), schema
-        )
-    return ds._replace(df=out)
+    return ds._replace(
+        df=base.groupBy(*others).applyInPandas(fill_group, ds.df.schema))
+
+
+def _interpolate_na_hermite(ds: XDataset, dim: str, method: str,
+                            limit: int | None, gap: float | None,
+                            use_coordinate: bool = True) -> XDataset:
+    """pchip/akima gap fill: cubic Hermite in the containing interval
+    with family-specific slopes (_hermite_slopes), on the
+    :func:`_interior_fill` harness (xarray/core/missing.py:486 routes
+    these to scipy; the slope constructions here are the published
+    formulas, no scipy needed)."""
+    def fit(xv, yv):
+        slopes = _hermite_slopes(xv, yv, method)
+
+        def at(xi, j):
+            hh = xv[j + 1] - xv[j]
+            t = (xi - xv[j]) / hh
+            h00 = (1 + 2 * t) * (1 - t) ** 2
+            h10 = t * (1 - t) ** 2
+            h01 = t * t * (3 - 2 * t)
+            h11 = t * t * (t - 1)
+            return (h00 * yv[j] + h10 * hh * slopes[j]
+                    + h01 * yv[j + 1] + h11 * hh * slopes[j + 1])
+        return at
+
+    return _interior_fill(ds, dim, limit, gap, use_coordinate, 2, fit)
 
 
 def _interpolate_na_poly(ds: XDataset, dim: str, order: int,
-                         limit: int | None, max_gap,
+                         limit: int | None, gap: float | None,
                          use_coordinate: bool = True) -> XDataset:
     """Local Lagrange gap fill: each null takes the exact-fit polynomial
-    through the ``order+1`` nearest valid points.  One Arrow batch per
-    complement-dim group (a global series buffers in one group — same
-    shape as the reference's numpy execution; segment first if the
-    series itself is corpus-sized)."""
+    through the ``order+1`` nearest valid points, on the
+    :func:`_interior_fill` harness (a global series buffers in one
+    group — same shape as the reference's numpy execution; segment
+    first if the series itself is corpus-sized)."""
     import numpy as np
-    import pandas as pd
 
-    others = [d for d in ds.dims if d != dim]
-    varlist = list(ds.data_vars)
-    gap = None
-    if max_gap is not None:
-        gap = float(max_gap.total_seconds()) if hasattr(max_gap, "total_seconds") else float(max_gap)
-    xdtype = ds.df.schema[dim].dataType
-    xnum = _as_double(F.col(dim), xdtype)
-    base = ds.df.withColumn("__x", xnum)
-    schema = base.drop("__x").schema
+    def fit(xv, yv):
+        def at(xi, j):
+            near = np.argsort(np.abs(xv - xi), kind="stable")[: order + 1]
+            # center on the fill point: the Vandermonde of raw
+            # coordinates is catastrophically conditioned for large
+            # ordinals; centered, the constant term IS the value
+            c = np.polyfit(xv[near] - xi, yv[near], order)
+            return float(c[-1])
+        return at
 
-    def fill_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__x").reset_index(drop=True)
-        x = (pdf["__x"].to_numpy("float64") if use_coordinate
-             else np.arange(len(pdf), dtype="float64"))
-        for v in varlist:
-            y = pdf[v].to_numpy("float64")
-            valid = ~np.isnan(y)
-            xv, yv = x[valid], y[valid]
-            if len(xv) < order + 1:
-                continue
-            vidx = np.flatnonzero(valid)
-            for i in np.flatnonzero(~valid):
-                # interior only: need a valid point on both sides
-                pos = np.searchsorted(vidx, i)
-                if pos == 0 or pos == len(vidx):
-                    continue
-                if gap is not None and (x[vidx[pos]] - x[vidx[pos - 1]]) > gap:
-                    continue
-                if limit is not None and (i - vidx[pos - 1]) > limit:
-                    continue
-                d = np.abs(xv - x[i])
-                near = np.argsort(d, kind="stable")[: order + 1]
-                # center on the fill point: the Vandermonde of raw
-                # coordinates is catastrophically conditioned for large
-                # ordinals; centered, the constant term IS the value
-                c = np.polyfit(xv[near] - x[i], yv[near], order)
-                y[i] = float(c[-1])
-            pdf[v] = y
-        return pdf.drop(columns="__x")
-
-    if others:
-        out = base.groupBy(*others).applyInPandas(fill_group, schema)
-    else:
-        out = base.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: fill_group(pdf.drop(columns="__g")), schema
-        )
-    return ds._replace(df=out)
+    return _interior_fill(ds, dim, limit, gap, use_coordinate, order + 1, fit)
 
 
 def interp(ds: XDataset, coords: dict, method: str = "linear",
@@ -595,15 +572,14 @@ def interp(ds: XDataset, coords: dict, method: str = "linear",
 
 
 def _interpolate_na_spline(ds: XDataset, dim: str, limit: int | None,
-                           max_gap, use_coordinate: bool = True,
+                           gap: float | None, use_coordinate: bool = True,
                            lam: float | None = None,
                            s: float | None = None) -> XDataset:
     """Natural cubic spline gap fill (xarray routes method='spline' to
     scipy's interpolator, core/missing.py:486; here the classic natural
     spline: second derivatives from the tridiagonal system solved with
-    the Thomas algorithm in numpy — no scipy).  Same applyInPandas
-    harness and interior-only/limit/max_gap semantics as the other
-    families.
+    the Thomas algorithm in numpy — no scipy), on the
+    :func:`_interior_fill` harness like the other families.
 
     With ``lam`` set, fits the PENALIZED (smoothing) cubic spline
     instead — minimize sum (y-g)^2 + lam * integral g''^2 (the Reinsch
@@ -626,16 +602,6 @@ def _interpolate_na_spline(ds: XDataset, dim: str, limit: int | None,
     to the interpolating spline; ``s`` at or above the straight-line
     residual returns the maximal smoothing."""
     import numpy as np
-    import pandas as pd
-
-    others = [d for d in ds.dims if d != dim]
-    varlist = list(ds.data_vars)
-    gap = None
-    if max_gap is not None:
-        gap = float(max_gap.total_seconds()) if hasattr(max_gap, "total_seconds") else float(max_gap)
-    xdtype = ds.df.schema[dim].dataType
-    base = ds.df.withColumn("__x", _as_double(F.col(dim), xdtype))
-    schema = base.drop("__x").schema
 
     def _second_derivs(xv, yv):
         n = len(xv)
@@ -758,44 +724,20 @@ def _interpolate_na_spline(ds: XDataset, dim: str, limit: int | None,
                 hi = mid
         return lo
 
-    def fill_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__x").reset_index(drop=True)
-        x = (pdf["__x"].to_numpy("float64") if use_coordinate
-             else np.arange(len(pdf), dtype="float64"))
-        for v in varlist:
-            y = pdf[v].to_numpy("float64")
-            valid = ~np.isnan(y)
-            xv, yv = x[valid], y[valid]
-            if len(xv) < 2:
-                continue
-            if s is not None:
-                gv, M = _smooth_fit(xv, yv, _select_lam(xv, yv, float(s)))
-            elif lam is None:
-                gv, M = yv, _second_derivs(xv, yv)
-            else:
-                gv, M = _smooth_fit(xv, yv, float(lam))
-            vidx = np.flatnonzero(valid)
-            for i in np.flatnonzero(~valid):
-                pos = np.searchsorted(vidx, i)
-                if pos == 0 or pos == len(vidx):
-                    continue  # interior only
-                j = pos - 1
-                if gap is not None and (xv[j + 1] - xv[j]) > gap:
-                    continue
-                if limit is not None and (i - vidx[j]) > limit:
-                    continue
-                hh = xv[j + 1] - xv[j]
-                t0, t1 = xv[j + 1] - x[i], x[i] - xv[j]
-                y[i] = (M[j] * t0 ** 3 / (6 * hh) + M[j + 1] * t1 ** 3 / (6 * hh)
-                        + (gv[j] / hh - M[j] * hh / 6) * t0
-                        + (gv[j + 1] / hh - M[j + 1] * hh / 6) * t1)
-            pdf[v] = y
-        return pdf.drop(columns="__x")
+    def fit(xv, yv):
+        if s is not None:
+            gv, M = _smooth_fit(xv, yv, _select_lam(xv, yv, float(s)))
+        elif lam is None:
+            gv, M = yv, _second_derivs(xv, yv)
+        else:
+            gv, M = _smooth_fit(xv, yv, float(lam))
 
-    if others:
-        out = base.groupBy(*others).applyInPandas(fill_group, schema)
-    else:
-        out = base.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-            lambda pdf: fill_group(pdf.drop(columns="__g")), schema
-        )
-    return ds._replace(df=out)
+        def at(xi, j):
+            hh = xv[j + 1] - xv[j]
+            t0, t1 = xv[j + 1] - xi, xi - xv[j]
+            return (M[j] * t0 ** 3 / (6 * hh) + M[j + 1] * t1 ** 3 / (6 * hh)
+                    + (gv[j] / hh - M[j] * hh / 6) * t0
+                    + (gv[j + 1] / hh - M[j + 1] * hh / 6) * t1)
+        return at
+
+    return _interior_fill(ds, dim, limit, gap, use_coordinate, 2, fit)

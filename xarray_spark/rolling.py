@@ -268,11 +268,11 @@ class XRolling:
 
     def _maybe_segmented(self, agg: str):
         """Auto-dispatch to the segmented path for the global-series
-        shape (options.py auto_segment_threshold) — lazy plan-statistics
+        shape (options.AUTO_SEGMENT_THRESHOLD) — lazy plan-statistics
         size estimate, no count() action."""
-        from xarray_spark.options import OPTIONS
+        from xarray_spark import options
         from xarray_spark._utils import estimated_rows
-        thr = OPTIONS["auto_segment_threshold"]
+        thr = options.AUTO_SEGMENT_THRESHOLD
         if (thr is None or self._center_of(self.dim) or len(self.windows) > 1
                 or self.window == -1):
             return None
@@ -381,17 +381,17 @@ class XRolling:
         Centered windows over a GLOBAL series stay in-plan — the
         segmented halo only replicates PRECEDING rows, a centered frame
         needs trailing context too.
-        GROUPED tables estimated above rolling_arrow_est_rows_bound
+        GROUPED tables estimated above options.ROLLING_ARROW_EST_ROWS_BOUND
         stay in-plan too (round-10 ADVICE #2): applyInPandas holds each
         complement-dim group as one pandas frame, and a few huge groups
         would OOM where the in-plan window streams; the no-complement
         shape is halo-segmented and exempt."""
-        from xarray_spark.options import OPTIONS
+        from xarray_spark import options
         has_others = any(d != self.dim for d in self.ds.dims)
         if len(self.windows) != 1 or self.window < 2 \
                 or (self._center_of(self.dim) and not has_others):
             return False
-        bound = OPTIONS["rolling_arrow_est_rows_bound"]
+        bound = options.ROLLING_ARROW_EST_ROWS_BOUND
         if bound is not None and has_others:
             from xarray_spark._utils import estimated_rows
             if estimated_rows(self.ds.df) > bound:
@@ -974,9 +974,12 @@ class XRollingExp:
     sequential per series — not a frame aggregate — so each complement-
     dim group runs as one Arrow batch through applyInPandas (pandas'
     compiled ewm kernel), mirroring the reference's numbagg path.
+    With no complement dim the keyless ``groupBy()`` gathers the whole
+    series into one call (one ``Exchange SinglePartition``).
     At scale the groups are the parallel unit: fine for many series,
     degenerate for one giant series (same limit as the reference, where
-    dask cannot chunk the scan dim either).
+    dask cannot chunk the scan dim either) — global-series mean/sum
+    above ``options.AUTO_SEGMENT_THRESHOLD`` go two-phase instead.
     """
 
     def __init__(self, ds: XDataset, windows: Mapping[str, float], window_type: str = "span"):
@@ -998,25 +1001,21 @@ class XRollingExp:
             pdf[varlist] = getattr(ew, agg)()
             return pdf
 
-        if others:
-            df = ds.df.groupBy(*others).applyInPandas(apply_fn, out_schema)
-        else:
+        if not others:
             seg = self._maybe_segmented(agg)
             if seg is not None:
                 return seg
-            df = ds.df.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-                lambda pdf: apply_fn(pdf.drop(columns="__g")), out_schema
-            )
-        return ds._replace(df=df)
+        return ds._replace(
+            df=ds.df.groupBy(*others).applyInPandas(apply_fn, out_schema))
 
     def _maybe_segmented(self, agg: str):
         """Global-series EWM above the auto-segment threshold goes
         two-phase (segmented.ewm_segmented) instead of one Arrow batch —
         mean/sum are exact linear recurrences; std/var stay on the
         pandas kernel."""
-        from xarray_spark.options import OPTIONS
+        from xarray_spark import options
         from xarray_spark._utils import estimated_rows
-        thr = OPTIONS["auto_segment_threshold"]
+        thr = options.AUTO_SEGMENT_THRESHOLD
         if thr is None or agg not in ("mean", "sum"):
             return None
         if estimated_rows(self.ds.df) < thr:
@@ -1069,12 +1068,7 @@ class XRollingExp:
                 pdf[v] = getattr(ew, agg)(b)
             return pdf.drop(columns="__other")
 
-        if others:
-            df = joined.groupBy(*others).applyInPandas(apply_fn, out_schema)
-        else:
-            df = joined.withColumn("__g", F.lit(0)).groupBy("__g").applyInPandas(
-                lambda pdf: apply_fn(pdf.drop(columns="__g")), out_schema
-            )
+        df = joined.groupBy(*others).applyInPandas(apply_fn, out_schema)
         return ds._replace(df=df.select(*ds.df.columns))
 
     def cov(self, other: XDataset) -> XDataset:
